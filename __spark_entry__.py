@@ -13,6 +13,9 @@ iterative float centroids) and get the driver's rows-only check.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1249,25 +1252,20 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate generation at 100 TB.
     pairs = dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3,
                                       threshold=0.05, max_doc_freq=1000)
-    # algorithm="star" (r11 optimization): the EXPLORATORY 0.05 threshold
-    # chains clusters to diameter ~13, the regime where the O(log d)
-    # star contraction beats label propagation's O(d) rounds (the r08
-    # crossover measurement, SCALING.md) — labels are identical
-    # (comp = min id; oracle hash-match re-proven at sf0.001/sf0.01).
-    return dedup.dedup_clusters(docs, pairs, "doc_id", algorithm="star") \
+    return dedup.dedup_clusters(docs, pairs, "doc_id") \
         .select("doc_id", "cluster_id")
 
 
 def q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-star/small-star connected components on a deliberately
-    chain-shaped graph (50-long doc-id chains, diameter ≈ 50) — the
-    O(log d) high-diameter path where label propagation would need 50
-    rounds. Oracle: recursive-CTE transitive closure over the same edges."""
+    """Connected components (large-star/small-star) on a deliberately
+    chain-shaped graph (50-long doc-id chains, diameter ≈ 50): O(log d)
+    rounds where min-label propagation would need 50. Oracle:
+    recursive-CTE transitive closure over the same edges."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     edges = (docs.where(F.col("doc_id") % 50 != 49)
              .select(F.col("doc_id").alias("src"),
                      (F.col("doc_id") + 1).alias("dst")))
-    return dedup.connected_components_star(edges).select("node", "comp")
+    return dedup.connected_components(edges).select("node", "comp")
 
 
 def q_global_rank_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1492,7 +1490,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       n=3, threshold=0.05)
     kept = dedup.select_representatives(
         docs, pairs.select("id_a", "id_b"), "doc_id",
-        order_by=[F.col("n_chars").desc()], algorithm="star")
+        order_by=[F.col("n_chars").desc()])
     return kept.select("doc_id", "source", "n_chars")
 
 
@@ -2828,221 +2826,205 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, SF_SMOKE)
 
 
+# Query registry: name -> query. The order here only breaks ties in
+# window_order().
+_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "q_hll_distinct": q_hll_distinct,
+    "q_weighted_sample": q_weighted_sample,
+    "q_mix_proportions": q_mix_proportions,
+    "q_dedup_against": q_dedup_against,
+    "q_pack_sequences": q_pack_sequences,
+    "q_top_bigram_fraction": q_top_bigram_fraction,
+    "q_gopher_quality": q_gopher_quality,
+    "q_bm25_search": q_bm25_search,
+    "q_semantic_dedup": q_semantic_dedup,
+    "q_corpus_stats": q_corpus_stats,
+    "q_collocations": q_collocations,
+    "q_dedup_keep_best": q_dedup_keep_best,
+    "q_cut_spans": q_cut_spans,
+    "q_ntile_ranks": q_ntile_ranks,
+    "q_ccnet_buckets": q_ccnet_buckets,
+    "q_top_fraction": q_top_fraction,
+    "q_corpus_kl": q_corpus_kl,
+    "q_bloom_anti_join": q_bloom_anti_join,
+    "q_dsir_weights": q_dsir_weights,
+    "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
+    "q_simhash_pairs": q_simhash_pairs,
+    "q_image_neardup": q_image_neardup,
+    "q_neardup_against": q_neardup_against,
+    "q_dedup_clusters": q_dedup_clusters,
+    "q_audio_neardup": q_audio_neardup,
+    "q_winnow_fingerprints": q_winnow_fingerprints,
+    "q_winnow_overlap": q_winnow_overlap,
+    "q_url_canonical": q_url_canonical,
+    "q_calibration_bins": q_calibration_bins,
+    "q_dedup_lines": q_dedup_lines,
+    "q_char_entropy": q_char_entropy,
+    "q_duplicate_line_fraction": q_duplicate_line_fraction,
+    "q_temperature_mix": q_temperature_mix,
+    "q_web_domains": q_web_domains,
+    "q_web_blocklist": q_web_blocklist,
+    "q_stream_interval_join": q_stream_interval_join,
+    "q_fp_store_dedup": q_fp_store_dedup,
+    "q_dup_line_chars": q_dup_line_chars,
+    "q1_pricing_summary": q1_pricing_summary,
+    "q_flatmap_wordcount": q_flatmap_wordcount,
+    "q_project_filter_map": q_project_filter_map,
+    "q_unpivot": q_unpivot,
+    "q_pack_unpack": q_pack_unpack,
+    "q_union_distinct": q_union_distinct,
+    "q_intersect_except": q_intersect_except,
+    "q_group_multi_agg": q_group_multi_agg,
+    "q_group_stats": q_group_stats,
+    "q_histogram": q_histogram,
+    "q_histogram_summary": q_histogram_summary,
+    "q_pivot": q_pivot,
+    "q_normalize": q_normalize,
+    "q_groupall": q_groupall,
+    "q_fold_reduce": q_fold_reduce,
+    "q_topk_per_group": q_topk_per_group,
+    "q_scan_cumsum": q_scan_cumsum,
+    "q_scan_running_max": q_scan_running_max,
+    "q_block_join": q_block_join,
+    "q_take_drop_while": q_take_drop_while,
+    "q_rank_lag": q_rank_lag,
+    "q_join_revenue_by_segment": q_join_revenue_by_segment,
+    "q_broadcast_join": q_broadcast_join,
+    "q_left_join_nulls": q_left_join_nulls,
+    "q_semi_anti": q_semi_anti,
+    "q_cross_tiny": q_cross_tiny,
+    "q_salted_skew_join": q_salted_skew_join,
+    "q_sampled_skew_join": q_sampled_skew_join,
+    "q_cogroup": q_cogroup,
+    "q_median_quartiles": q_median_quartiles,
+    "q3_shipping_priority": q3_shipping_priority,
+    "q4_order_priority_exists": q4_order_priority_exists,
+    "q5_local_supplier_volume": q5_local_supplier_volume,
+    "q6_forecast_revenue": q6_forecast_revenue,
+    "q7_volume_shipping": q7_volume_shipping,
+    "q8_market_share": q8_market_share,
+    "q9_product_profit": q9_product_profit,
+    "q10_returned_items": q10_returned_items,
+    "q11_important_parts": q11_important_parts,
+    "q13_customer_distribution": q13_customer_distribution,
+    "q14_promo_effect": q14_promo_effect,
+    "q_threshold_sweep": q_threshold_sweep,
+    "q_fuzzy_join": q_fuzzy_join,
+    "q_train_quality": q_train_quality,
+    "q_contamination_report": q_contamination_report,
+    "q_corpus_diff": q_corpus_diff,
+    "q_leakage_safe_split": q_leakage_safe_split,
+    "q_semantic_dedup_auto": q_semantic_dedup_auto,
+    "q_semantic_decontam": q_semantic_decontam,
+    "q18_large_volume_customer": q18_large_volume_customer,
+    "q22_idle_customers": q22_idle_customers,
+    "q_mkstring": q_mkstring,
+    "q_times_product": q_times_product,
+    "q_head_last": q_head_last,
+    "q_toset": q_toset,
+    "q_maplist": q_maplist,
+    "q_dot": q_dot,
+    "q15_top_supplier": q15_top_supplier,
+    "q16_supplier_part_count": q16_supplier_part_count,
+    "q17_small_quantity_revenue": q17_small_quantity_revenue,
+    "q19_disjunctive_revenue": q19_disjunctive_revenue,
+    "q2_min_cost_supplier": q2_min_cost_supplier,
+    "q20_excess_suppliers": q20_excess_suppliers,
+    "q21_waiting_suppliers": q21_waiting_suppliers,
+    "q_matmul": q_matmul,
+    "q_matrix_rownorm_topk": q_matrix_rownorm_topk,
+    "q_matrix_elementwise": q_matrix_elementwise,
+    "q_matrix_reductions": q_matrix_reductions,
+    "q_matrix_col_normalize": q_matrix_col_normalize,
+    "q_matrix_filter_ops": q_matrix_filter_ops,
+    "q_matrix_zip": q_matrix_zip,
+    "q_matrix_map_rows": q_matrix_map_rows,
+    "q_vector_matrix_product": q_vector_matrix_product,
+    "q_diag_inverse_trace": q_diag_inverse_trace,
+    "q_combinations": q_combinations,
+    "q_subset_sum": q_subset_sum,
+    "q_pagerank": q_pagerank,
+    "q_exact_dedup": q_exact_dedup,
+    "q_ngram_jaccard_pairs": q_ngram_jaccard_pairs,
+    "q_deterministic_sample": q_deterministic_sample,
+    "q_train_split": q_train_split,
+    "q_stratified_sample": q_stratified_sample,
+    "q_text_quality": q_text_quality,
+    "q_lang_id": q_lang_id,
+    "q_fingerprint": q_fingerprint,
+    "q_vocabulary": q_vocabulary,
+    "q_tfidf_top_terms": q_tfidf_top_terms,
+    "q_multimodal_features": q_multimodal_features,
+    "q_cosine_topk": q_cosine_topk,
+    "q_embedding_neardup_exact": q_embedding_neardup_exact,
+    "q_events_daily": q_events_daily,
+    "q_calibration_by_slice": q_calibration_by_slice,
+    "q_sweep_by_slice": q_sweep_by_slice,
+    "q_cohens_kappa": q_cohens_kappa,
+    "q_pr_auc": q_pr_auc,
+    "q_pr_auc_by_slice": q_pr_auc_by_slice,
+    "q_auc_by_slice": q_auc_by_slice,
+    "q_quality_auc": q_quality_auc,
+    "q_cc_star": q_cc_star,
+    "q_matrix_scalar_pipe": q_matrix_scalar_pipe,
+    "q_events_rollup": q_events_rollup,
+    "q_session_window": q_session_window,
+    "q_sessionize": q_sessionize,
+    "q_asof_join": q_asof_join,
+    "q_range_join": q_range_join,
+    "q_cube_agg": q_cube_agg,
+    "q_substring_spans": q_substring_spans,
+    "q_unigram_lm": q_unigram_lm,
+    "q_linear_quality": q_linear_quality,
+    "q_global_rank_scan": q_global_rank_scan,
+    "q_bigram_lm": q_bigram_lm,
+    "q_kmeans": q_kmeans,
+    "q_map_stream": q_map_stream,
+    "q_chunk_documents": q_chunk_documents,
+    "q_topk_window": q_topk_window,
+    "q_rank_by_value": q_rank_by_value,
+    "q_decontaminate": q_decontaminate,
+    "q_pack_shards": q_pack_shards,
+    "q_domain_cap": q_domain_cap,
+    "q12_priority_by_flag": q12_priority_by_flag,
+    "q_pii_redact": q_pii_redact,
+    "q_top_word_fraction": q_top_word_fraction,
+    "q_cosine_topk_lsh": q_cosine_topk_lsh,
+    "q_cosine_topk_ivf": q_cosine_topk_ivf,
+    "q_embedding_neardup": q_embedding_neardup,
+}
+
+# Queries whose operator changed since their last driver row: they lead the
+# window ahead of the rotation. Reset when the driver has re-checked them.
+REVERIFY = ("q_cc_star", "q_dedup_clusters", "q_dedup_keep_best")
+
+_HERE = os.path.dirname(os.path.abspath(__file__))
+
+
+def _last_checked(root: str) -> dict[str, int]:
+    """query -> newest round N whose ``root/CORRECTNESS_rN.json`` has a row
+    for it; never-checked queries are absent."""
+    last: dict[str, int] = {}
+    for fn in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(fn)[len("CORRECTNESS_r"):-len(".json")])
+        with open(fn) as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
+def window_order(names, root: str = _HERE) -> list[str]:
+    """Rotation order for the driver, which checks the first 50 entries of
+    ``queries()`` each round: ``REVERIFY`` first, then never-checked
+    queries, then the stalest. Ties keep the order of ``names``."""
+    last = _last_checked(root)
+    rest = sorted((n for n in names if n not in REVERIFY),
+                  key=lambda n: last.get(n, -1))
+    return [*REVERIFY, *rest]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver evaluates exactly the FIRST 50 dict entries.
-    # r11 window (VERDICT r10 next-round #1): the 19 r07-stale entries
-    # lead (ledgered in r10 as the r11 queue head: q_hll_distinct ...
-    # q_dsir_weights), then 5 changed-operator re-verifications for the
-    # distinct-hash/signature-space banding rewrites (VERDICT r10
-    # #2/#3) -- q_minhash_lsh_pairs (signs/bands/verifies once per
-    # DISTINCT shingle set), q_simhash_pairs and q_image_neardup (both
-    # consume the rewritten dedup.hamming_band_pairs, which now bands
-    # distinct hash VALUES and recovers id pairs by an output-sized
-    # equi-join), q_neardup_against (minhash_signatures' signature
-    # kernel extracted into _minhash_sig_expr -- expression-identical,
-    # same rule as the r10 q_simhash_pairs extraction), and
-    # q_dedup_clusters (VERDICT r10 #3 names it alongside the minhash
-    # rewrite) -- then the NEW q_audio_neardup (energy-hash audio
-    # near-dup tier, r11; never driver-checked, so the rotation test
-    # requires it inside the window) -- then the r08-green block in
-    # queue order (q_winnow_fingerprints onward, first 25 of the 47;
-    # q_normalize displaced by the audio insert). The 22 r08-green
-    # entries the window cannot fit (q_normalize, q_groupall ...
-    # q6_forecast_revenue) sit directly below position 50 and lead the
-    # r12 window. Every insertion/displacement is ledgered at the
-    # displacement point so the header never overstates what the driver
-    # verified (ADVICE r06 #1).
-    return {
-        # -- r11 window head: the 19 r07-green entries (displaced from
-        #    the r10 window by its head insertions; ledgered in r10 as
-        #    the r11 queue head, VERDICT r10 #1) --
-        "q_hll_distinct": q_hll_distinct,
-        "q_weighted_sample": q_weighted_sample,
-        "q_mix_proportions": q_mix_proportions,
-        "q_dedup_against": q_dedup_against,
-        "q_pack_sequences": q_pack_sequences,
-        "q_top_bigram_fraction": q_top_bigram_fraction,
-        "q_gopher_quality": q_gopher_quality,
-        "q_bm25_search": q_bm25_search,
-        "q_semantic_dedup": q_semantic_dedup,
-        "q_corpus_stats": q_corpus_stats,
-        "q_collocations": q_collocations,
-        "q_dedup_keep_best": q_dedup_keep_best,
-        "q_cut_spans": q_cut_spans,
-        "q_ntile_ranks": q_ntile_ranks,
-        "q_ccnet_buckets": q_ccnet_buckets,
-        "q_top_fraction": q_top_fraction,
-        "q_corpus_kl": q_corpus_kl,
-        "q_bloom_anti_join": q_bloom_anti_join,
-        "q_dsir_weights": q_dsir_weights,
-        # -- r11 window: changed-operator re-verification (see header;
-        #    the distinct-hash/signature-space rewrites of
-        #    dedup.hamming_band_pairs / dedup.minhash_lsh_pairs and the
-        #    _minhash_sig_expr extraction, VERDICT r10 #2/#3) --
-        "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_image_neardup": q_image_neardup,
-        "q_neardup_against": q_neardup_against,
-        "q_dedup_clusters": q_dedup_clusters,
-        # -- r11 window: NEW audio near-dup tier (multimodal.audio_ehash
-        #    + the shared hamming banding), first driver run —
-        #    displacing q_normalize from the window tail to the r12
-        #    queue head --
-        "q_audio_neardup": q_audio_neardup,
-        # -- r11 window: r08-green block, queue order (first 25 of the
-        #    47; the 22 displaced are ledgered below position 50 and
-        #    lead the r12 window) --
-        "q_winnow_fingerprints": q_winnow_fingerprints,
-        "q_winnow_overlap": q_winnow_overlap,
-        "q_url_canonical": q_url_canonical,
-        "q_calibration_bins": q_calibration_bins,
-        "q_dedup_lines": q_dedup_lines,
-        "q_char_entropy": q_char_entropy,
-        "q_duplicate_line_fraction": q_duplicate_line_fraction,
-        "q_temperature_mix": q_temperature_mix,
-        "q_web_domains": q_web_domains,
-        "q_web_blocklist": q_web_blocklist,
-        "q_stream_interval_join": q_stream_interval_join,
-        "q_fp_store_dedup": q_fp_store_dedup,
-        "q_dup_line_chars": q_dup_line_chars,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q_flatmap_wordcount": q_flatmap_wordcount,
-        "q_project_filter_map": q_project_filter_map,
-        "q_unpivot": q_unpivot,
-        "q_pack_unpack": q_pack_unpack,
-        "q_union_distinct": q_union_distinct,
-        "q_intersect_except": q_intersect_except,
-        "q_group_multi_agg": q_group_multi_agg,
-        "q_group_stats": q_group_stats,
-        "q_histogram": q_histogram,
-        "q_histogram_summary": q_histogram_summary,
-        "q_pivot": q_pivot,
-        # ---- position 50 ends here ----
-        # -- r12 queue head: the 22 r08-green entries the r11 window
-        #    could not fit (displaced by the 5 re-verifications and the
-        #    q_audio_neardup insert above); NOT re-verified this round --
-        "q_normalize": q_normalize,
-        "q_groupall": q_groupall,
-        "q_fold_reduce": q_fold_reduce,
-        "q_topk_per_group": q_topk_per_group,
-        "q_scan_cumsum": q_scan_cumsum,
-        "q_scan_running_max": q_scan_running_max,
-        "q_block_join": q_block_join,
-        "q_take_drop_while": q_take_drop_while,
-        "q_rank_lag": q_rank_lag,
-        "q_join_revenue_by_segment": q_join_revenue_by_segment,
-        "q_broadcast_join": q_broadcast_join,
-        "q_left_join_nulls": q_left_join_nulls,
-        "q_semi_anti": q_semi_anti,
-        "q_cross_tiny": q_cross_tiny,
-        "q_salted_skew_join": q_salted_skew_join,
-        "q_sampled_skew_join": q_sampled_skew_join,
-        "q_cogroup": q_cogroup,
-        "q_median_quartiles": q_median_quartiles,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q4_order_priority_exists": q4_order_priority_exists,
-        "q5_local_supplier_volume": q5_local_supplier_volume,
-        "q6_forecast_revenue": q6_forecast_revenue,
-        # -- r09-green block (CORRECTNESS_r09 verified these in window
-        #    order; q_neardup_against moved to the r11 window head for
-        #    changed-operator re-verification) --
-        "q7_volume_shipping": q7_volume_shipping,
-        "q8_market_share": q8_market_share,
-        "q9_product_profit": q9_product_profit,
-        "q10_returned_items": q10_returned_items,
-        "q11_important_parts": q11_important_parts,
-        "q13_customer_distribution": q13_customer_distribution,
-        "q14_promo_effect": q14_promo_effect,
-        "q_threshold_sweep": q_threshold_sweep,
-        "q_fuzzy_join": q_fuzzy_join,
-        "q_train_quality": q_train_quality,
-        "q_contamination_report": q_contamination_report,
-        "q_corpus_diff": q_corpus_diff,
-        "q_leakage_safe_split": q_leakage_safe_split,
-        "q_semantic_dedup_auto": q_semantic_dedup_auto,
-        "q_semantic_decontam": q_semantic_decontam,
-        "q18_large_volume_customer": q18_large_volume_customer,
-        "q22_idle_customers": q22_idle_customers,
-        "q_mkstring": q_mkstring,
-        "q_times_product": q_times_product,
-        "q_head_last": q_head_last,
-        "q_toset": q_toset,
-        "q_maplist": q_maplist,
-        "q_dot": q_dot,
-        "q15_top_supplier": q15_top_supplier,
-        "q16_supplier_part_count": q16_supplier_part_count,
-        "q17_small_quantity_revenue": q17_small_quantity_revenue,
-        "q19_disjunctive_revenue": q19_disjunctive_revenue,
-        "q2_min_cost_supplier": q2_min_cost_supplier,
-        "q20_excess_suppliers": q20_excess_suppliers,
-        "q21_waiting_suppliers": q21_waiting_suppliers,
-        "q_matmul": q_matmul,
-        "q_matrix_rownorm_topk": q_matrix_rownorm_topk,
-        "q_matrix_elementwise": q_matrix_elementwise,
-        "q_matrix_reductions": q_matrix_reductions,
-        "q_matrix_col_normalize": q_matrix_col_normalize,
-        "q_matrix_filter_ops": q_matrix_filter_ops,
-        "q_matrix_zip": q_matrix_zip,
-        "q_matrix_map_rows": q_matrix_map_rows,
-        "q_vector_matrix_product": q_vector_matrix_product,
-        "q_diag_inverse_trace": q_diag_inverse_trace,
-        "q_combinations": q_combinations,
-        "q_subset_sum": q_subset_sum,
-        "q_pagerank": q_pagerank,
-        "q_exact_dedup": q_exact_dedup,
-        "q_ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        # -- r10-green block (freshest driver rows, tail of the rotation;
-        #    CORRECTNESS_r10 verified these in window order;
-        #    q_minhash_lsh_pairs / q_simhash_pairs / q_image_neardup /
-        #    q_dedup_clusters moved to the r11 window for
-        #    changed-operator re-verification) --
-        "q_deterministic_sample": q_deterministic_sample,
-        "q_train_split": q_train_split,
-        "q_stratified_sample": q_stratified_sample,
-        "q_text_quality": q_text_quality,
-        "q_lang_id": q_lang_id,
-        "q_fingerprint": q_fingerprint,
-        "q_vocabulary": q_vocabulary,
-        "q_tfidf_top_terms": q_tfidf_top_terms,
-        "q_multimodal_features": q_multimodal_features,
-        "q_cosine_topk": q_cosine_topk,
-        "q_embedding_neardup_exact": q_embedding_neardup_exact,
-        "q_events_daily": q_events_daily,
-        "q_calibration_by_slice": q_calibration_by_slice,
-        "q_sweep_by_slice": q_sweep_by_slice,
-        "q_cohens_kappa": q_cohens_kappa,
-        "q_pr_auc": q_pr_auc,
-        "q_pr_auc_by_slice": q_pr_auc_by_slice,
-        "q_auc_by_slice": q_auc_by_slice,
-        "q_quality_auc": q_quality_auc,
-        "q_cc_star": q_cc_star,
-        "q_matrix_scalar_pipe": q_matrix_scalar_pipe,
-        "q_events_rollup": q_events_rollup,
-        "q_session_window": q_session_window,
-        "q_sessionize": q_sessionize,
-        "q_asof_join": q_asof_join,
-        "q_range_join": q_range_join,
-        "q_cube_agg": q_cube_agg,
-        "q_substring_spans": q_substring_spans,
-        "q_unigram_lm": q_unigram_lm,
-        "q_linear_quality": q_linear_quality,
-        "q_global_rank_scan": q_global_rank_scan,
-        "q_bigram_lm": q_bigram_lm,
-        "q_kmeans": q_kmeans,
-        "q_map_stream": q_map_stream,
-        "q_chunk_documents": q_chunk_documents,
-        "q_topk_window": q_topk_window,
-        "q_rank_by_value": q_rank_by_value,
-        "q_decontaminate": q_decontaminate,
-        "q_pack_shards": q_pack_shards,
-        "q_domain_cap": q_domain_cap,
-        "q12_priority_by_flag": q12_priority_by_flag,
-        "q_pii_redact": q_pii_redact,
-        "q_top_word_fraction": q_top_word_fraction,
-        "q_cosine_topk_lsh": q_cosine_topk_lsh,
-        "q_cosine_topk_ivf": q_cosine_topk_ivf,
-        "q_embedding_neardup": q_embedding_neardup,
-    }
+    return {n: _QUERIES[n] for n in window_order(_QUERIES)}
 
 
 def retired_probes() -> dict[str, tuple]:

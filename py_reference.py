@@ -1046,10 +1046,9 @@ def golden_components(nodes, edges):
     """Independent connected-components oracle: union-find with
     path-halving + union-by-size over an undirected edge list, then each
     root's label rewritten to the MIN node id of its component — the same
-    representative rule as ``connected_components`` /
-    ``connected_components_star``. O(E·α(E)), so it verifies the Spark
-    labelings at corpus sizes where the DuckDB recursive-CTE transitive
-    closure (the sf0.01 oracle) explodes. Nodes absent from ``edges``
+    representative rule as ``dedup.connected_components``. O(E·α(E)), so
+    it verifies the Spark labelings at corpus sizes where the DuckDB
+    recursive-CTE transitive closure (the sf0.01 oracle) explodes. Nodes absent from ``edges``
     label as themselves. Returns {node: component_min_id}."""
     parent, size = {}, {}
     endpoints = set()

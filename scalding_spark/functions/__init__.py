@@ -10,7 +10,7 @@ host-language lambda (SURVEY.md §2.8). This engine's scalar layer IS
                   stats, context-window chunking.
 - ``dedup``       exact + MinHash-LSH + SimHash + n-gram-Jaccard dedup,
                   span-level shared-passage detection, connected-components
-                  near-dup clustering (label-prop + large/small-star),
+                  near-dup clustering (large/small-star),
                   batch near-dup gate vs a signature-only store
                   (neardup_against), snapshot diff audit (corpus_diff),
                   per-benchmark-item contamination_report.

@@ -393,6 +393,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
             F.countDistinct(F.col("id"), gkey).alias("dg"),
             F.countDistinct(gkey).alias("g")).first()
         if st["dg"] > st["di"]:
+            if persist_index:
+                from scalding_spark.session import unregister_persisted
+                unregister_persisted(docs)
             raise ValueError(
                 "ngram_jaccard_pairs requires unique doc ids: "
                 f"{st['dg'] - st['di']} id(s) appear with more than one "
@@ -950,95 +953,6 @@ def hamming_band_pairs(hashes: DataFrame, id_col: str, hash_col: str,
     return same.unionByName(cross)
 
 
-def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
-                         max_iter: int = 50,
-                         stats: dict | None = None) -> DataFrame:
-    """Connected components over an undirected edge list → (node, component),
-    where component = the minimum node id in the component.
-
-    Min-label propagation to a fixed point: each iteration joins the
-    symmetrized edge list to the current labels and takes the per-node min
-    of self + neighbor labels. Iterations needed = graph diameter — for
-    near-dup clusters (small, dense cliques from LSH/Jaccard pair
-    generators) that is 2-3, so the total cost is a handful of
-    fixed-width-key shuffles; nothing is ever collected to the driver.
-
-    Scale notes: the edge list is persisted once (reused every iteration);
-    labels are eagerly localCheckpoint-ed per iteration — without that the
-    logical plan doubles each round (same lesson as PageRank, matrix.py).
-    Convergence is detected with a changed-label count that piggybacks on
-    the already-shuffled aggregate. For web-scale graphs with long chains
-    (diameter ≫ 10), use ``connected_components_star`` (O(log d) rounds);
-    for dedup workloads label propagation wins on constant factors —
-    PROVIDED the pair threshold is tight. Measured crossover (r08,
-    SCALING.md): an EXPLORATORY-low Jaccard threshold (0.05 at sf1)
-    chains near-dup clusters to diameter 13, where this loop runs 13
-    rounds vs star's 5 and star is ~1.7× faster end-to-end; at
-    production thresholds (≥0.7) clusters stay clique-shaped and label
-    propagation converges in 2-3 rounds. Rounds scale with cluster
-    DIAMETER, not corpus size — at 100 TB the iteration count is the
-    same, each round just shuffles more edges.
-    ``stats['iterations']`` reports rounds used (matching
-    ``connected_components_star`` / ``kmeans``).
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # persist the symmetrized edge list ALREADY hash-partitioned on the
-    # per-round join key (`b`): every iteration's `sym.join(labels, ...)`
-    # then reuses the in-memory partitioning and exchanges only the
-    # (node-sized) labels side — without this BOTH sides exchanged every
-    # round, and sym (2×edges, the biggest table here) dominated
-    # (VERDICT r09 #2; the one-time repartition pays for itself from
-    # round 2). distinct() already shuffles, so the extra exchange at
-    # build time is edge-list-sized, once.
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
-        .distinct().repartition(F.col("b")).persist()
-    rounds = 0
-    try:
-        # inside the try: this EAGER materialize is the first action over
-        # the persisted sym — a failure here must still unpersist it
-        labels = materialize(
-            sym.select(F.col("a").alias("node")).distinct()
-               .select("node", F.col("node").alias("comp")),
-            eager=True, iterative=True)
-        null_old = F.lit(None).cast(labels.schema["comp"].dataType).alias("old")
-        for _ in range(max_iter):
-            rounds += 1
-            # One shuffle + one action per iteration: the neighbor-min agg
-            # also carries each node's previous label (`old`, exactly one
-            # non-null per node), so convergence detection reads the same
-            # aggregate instead of paying a second join+count job. The lazy
-            # checkpoint materializes during the `changed` action.
-            nbr = (sym.join(labels, sym.b == labels.node)
-                   .select(sym.a.alias("node"), F.col("comp"), null_old))
-            new_labels = materialize(
-                labels.select("node", "comp", F.col("comp").alias("old"))
-                      .union(nbr)
-                      .groupBy("node").agg(F.min("comp").alias("comp"),
-                                           F.min("old").alias("old")),
-                eager=False, iterative=True)
-            # full aggregate, NOT limit(1): a short-circuiting action would
-            # materialize only some partitions of the lazy checkpoint, and
-            # the unmaterialized rest would re-run its whole lineage next
-            # iteration. coalesce: sum over ZERO rows is NULL (empty edge
-            # list — a normal outcome of dedup), which must read as
-            # converged, not never-done
-            changed = new_labels.agg(
-                F.coalesce(F.sum(F.when(F.col("comp") < F.col("old"), 1)
-                                  .otherwise(0)),
-                           F.lit(0))
-            ).collect()[0][0]
-            labels = new_labels.select("node", "comp")
-            if changed == 0:
-                break
-    finally:
-        # unpersist on the error path too — a mid-loop failure (OOM, task
-        # abort) must not leak sym in the executor block cache
-        sym.unpersist()
-    if stats is not None:
-        stats["iterations"] = rounds
-    return labels.select("node", "comp")
-
-
 def decontaminate(corpus: DataFrame, benchmark: DataFrame, text_col: str,
                   id_col: str, n: int = 8, min_shared: int = 1,
                   benchmark_text_col: str | None = None) -> DataFrame:
@@ -1108,21 +1022,27 @@ def contamination_report(corpus: DataFrame, benchmark: DataFrame,
                     .alias("n_shared_ngrams")))
 
 
-def connected_components_star(edges: DataFrame, src: str = "src",
-                              dst: str = "dst", max_iter: int = 30,
-                              stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star / small-star — the
-    high-diameter path promised in ``connected_components``'s docstring.
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
+                         max_iter: int = 30,
+                         stats: dict | None = None) -> DataFrame:
+    """Connected components over an undirected edge list → (node, comp),
+    where comp = the minimum node id in the component. Every node that
+    appears in ``edges`` is labelled, including one whose only edge is a
+    self-loop; edges with a NULL endpoint are ignored.
 
-    Label propagation needs O(diameter) rounds; this needs O(log d) (the
-    published two-phase star-contraction scheme for MapReduce-style CC).
-    Use it for chain-shaped graphs (linkage chains, web graphs); for dedup
-    clique clusters plain label propagation wins on constant factors.
+    Alternating large-star / small-star (the published two-phase
+    star-contraction scheme for MapReduce-style CC): O(log d) rounds for
+    a component of diameter d, where min-label propagation needs O(d).
+    Dedup clique clusters converge in 2-3 rounds, chain-shaped graphs
+    (linkage chains at exploratory thresholds, web graphs) in a handful
+    more. Rounds scale with cluster DIAMETER, not corpus size — at 100 TB
+    the iteration count is the same, each round just shuffles more edges.
+    Nothing but a per-round scalar fingerprint is collected to the driver.
 
     Each round over the parent-pointer edge set:
 
     - large-star: symmetrize; every neighbor STRICTLY LARGER than u is
-      re-pointed at min(N(u) ∪ {u}). One groupBy(min) + one join, both on
+      re-pointed at min(N(u) ∪ {u}). One window min over u, on
       fixed-width node ids.
     - small-star: orient u > v; every neighbor (all smaller) and u itself
       point at the min neighbor.
@@ -1131,32 +1051,30 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     star height geometrically. Convergence = (count, order-insensitive
     hash-sum) fingerprint of the edge set unchanged — exact equality would
     cost an extra join per round; a false stop needs a 64-bit hash-sum
-    collision at equal counts (~2⁻⁶⁴, documented trade).
+    collision at equal counts (~2⁻⁶⁴, documented trade). Each round's
+    output is lineage-cut with ``materialize(iterative=True)`` — without
+    that the logical plan doubles every round.
 
-    Returns (node, comp) with comp = min node id of the component, matching
-    ``connected_components``. ``stats['iterations']`` reports rounds used.
+    ``stats['iterations']`` reports rounds used (matching ``kmeans``).
     """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .where(F.col("u") != F.col("v")))
-    # Cut the upstream ONCE, then derive all_nodes from the cut (r12):
-    # all_nodes and e used to be two separate eager materializations,
-    # EACH recomputing the caller's un-checkpointed upstream — for
-    # q_dedup_clusters that upstream is the entire quadratic ngram pair
-    # generation, executed twice (~17 s of the query's 44 s at sf1).
-    # The canonical edge set has the identical node population (the
-    # u != v filter precedes both), so all_nodes now reads e's
-    # checkpoint instead of the world.
+    # Cut the upstream ONCE, then derive all_nodes from the cut: a second
+    # eager pass over the caller's un-checkpointed upstream recomputes it
+    # (for q_dedup_clusters, the entire quadratic ngram pair generation —
+    # ~17 s of the query's 44 s at sf1 in r12). Self-loops stay in the cut
+    # so a node whose only edge is (n, n) still reaches all_nodes; the
+    # rounds then drop them.
     e = materialize(
-        e.select(F.greatest("u", "v").alias("u"),
-                 F.least("u", "v").alias("v")).distinct(),
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna()
+        .select(F.greatest("u", "v").alias("u"),
+                F.least("u", "v").alias("v")).distinct(),
         eager=True, iterative=True)
     all_nodes = materialize(
         e.select(F.col("u").alias("node"))
          .union(e.select(F.col("v").alias("node")))
          .distinct(), eager=True, iterative=True)
+    e = e.where(F.col("u") != F.col("v"))
     prev_fp = None
     rounds = 0
-    from pyspark.sql import Window
     wu = Window.partitionBy("u")
     for _ in range(max_iter):
         rounds += 1
@@ -1225,18 +1143,12 @@ def connected_components_star(edges: DataFrame, src: str = "src",
 
 
 def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str,
-                   id_a: str = "id_a", id_b: str = "id_b",
-                   algorithm: str = "label") -> DataFrame:
+                   id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Assign every row a duplicate-cluster id from a near-dup pair list:
     cluster_id = min doc id in the row's connected component; rows with no
     near-dup edge keep their own id (left join + coalesce, so the full
-    corpus never funnels through the component computation).
-
-    ``algorithm='label'`` (default) is right for dedup graphs (dense
-    cliques, diameter 2-3); ``'star'`` switches to the O(log d)
-    large-star/small-star contraction for chain-shaped pair graphs."""
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comps = cc(pairs, src=id_a, dst=id_b)
+    corpus never funnels through the component computation)."""
+    comps = connected_components(pairs, src=id_a, dst=id_b)
     return (df.join(comps, df[id_col] == comps.node, "left")
             .withColumn("cluster_id", F.coalesce(F.col("comp"), F.col(id_col)))
             .drop("node", "comp"))
@@ -1244,8 +1156,7 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str,
 
 def select_representatives(df: DataFrame, pairs: DataFrame, id_col: str,
                            order_by: list | None = None,
-                           id_a: str = "id_a", id_b: str = "id_b",
-                           algorithm: str = "label") -> DataFrame:
+                           id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Keep exactly ONE row per duplicate cluster, the keeper chosen by
     ``order_by`` (a list of Columns, e.g. ``[F.col('n_chars').desc()]`` to
     keep the longest; ``[quality.desc()]`` to keep the best-scored). Ties —
@@ -1260,7 +1171,7 @@ def select_representatives(df: DataFrame, pairs: DataFrame, id_col: str,
     exchange keys on cluster_id — no global sort. Rows with no near-dup
     edge are their own cluster and always survive.
     """
-    clustered = dedup_clusters(df, pairs, id_col, id_a, id_b, algorithm)
+    clustered = dedup_clusters(df, pairs, id_col, id_a, id_b)
     if order_by is None:
         return (clustered.where(F.col("cluster_id") == F.col(id_col))
                 .drop("cluster_id"))

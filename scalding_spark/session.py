@@ -95,6 +95,16 @@ def register_persisted(df) -> None:
     _MATERIALIZED.setdefault(df.sparkSession, []).append(df._jdf)
 
 
+def unregister_persisted(df) -> None:
+    """Unpersist a frame recorded by :func:`register_persisted` now and
+    drop it from the ledger — the raise path of an operator that persisted
+    before it validated, so a caller that catches the error holds no
+    cache entry."""
+    df.unpersist()
+    frames = _MATERIALIZED.get(df.sparkSession, [])
+    frames[:] = [j for j in frames if j is not df._jdf]
+
+
 def release_materialized(session=None) -> None:
     """Unpersist every frame cached by ``materialize()``'s persist mode
     or registered via :func:`register_persisted` — one session's, or all

@@ -308,14 +308,20 @@ def op_kmeans(spark, n):
     return m
 
 
-def op_cc_label(spark, n):
-    """Label propagation on the dedup-shaped graph (n/5 five-node star
-    cliques, diameter 2): rounds must stay CONSTANT in n and shuffle bytes
-    ~linear (edges × rounds, fixed-width keys only)."""
+def op_cc(spark, n, shape):
+    """Connected components on one of two graph shapes. ``cliques``: the
+    dedup shape, n/5 five-node star cliques (diameter 2) — rounds must
+    stay CONSTANT in n and shuffle bytes ~linear (edges × rounds,
+    fixed-width keys only). ``chain``: a SINGLE n-long chain (diameter
+    n) — rounds must grow ~log n."""
     from scalding_spark.functions import dedup
-    edges = (spark.range(n).where(F.col("id") % 5 != 0)
-             .select(F.col("id").alias("src"),
-                     (F.col("id") - F.col("id") % 5).alias("dst")))
+    if shape == "cliques":
+        edges = (spark.range(n).where(F.col("id") % 5 != 0)
+                 .select(F.col("id").alias("src"),
+                         (F.col("id") - F.col("id") % 5).alias("dst")))
+    else:
+        edges = spark.range(n - 1).select(F.col("id").alias("src"),
+                                          (F.col("id") + 1).alias("dst"))
 
     def run():
         stats = {}
@@ -327,30 +333,13 @@ def op_cc_label(spark, n):
     return m
 
 
-def op_cc_star(spark, n):
-    """Large-star/small-star on a SINGLE n-long chain (diameter = n):
-    rounds must grow ~log n — the regime where label propagation would
-    need n rounds."""
-    from scalding_spark.functions import dedup
-    edges = (spark.range(n - 1)
-             .select(F.col("id").alias("src"),
-                     (F.col("id") + 1).alias("dst")))
-
-    def run():
-        stats = {}
-        labels = dedup.connected_components_star(edges, stats=stats)
-        return {"rows": labels.count(), "rounds": stats["iterations"]}
-
-    m = measure(spark, run)
-    m["shuffle_w_per_round"] = m["shuffle_w"] // max(1, m["rounds"])
-    return m
-
-
 # iterative ops build their own inputs from n (embeddings / edge lists)
 ITER_OPS = {
     "kmeans": (op_kmeans, [2000, 20000, 60000]),
-    "cc_label": (op_cc_label, [5000, 50000, 150000]),
-    "cc_star": (op_cc_star, [5000, 50000, 150000]),
+    "cc_cliques": (lambda spark, n: op_cc(spark, n, "cliques"),
+                   [5000, 50000, 150000]),
+    "cc_chain": (lambda spark, n: op_cc(spark, n, "chain"),
+                 [5000, 50000, 150000]),
 }
 
 

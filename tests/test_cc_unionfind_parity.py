@@ -1,4 +1,4 @@
-"""Differential verification of the connected-components operators against
+"""Differential verification of the connected-components operator against
 an INDEPENDENT pure-Python union-find (py_reference.golden_components).
 
 The driver's SQL oracle for component queries is a DuckDB recursive-CTE
@@ -11,7 +11,6 @@ SCALING.md)."""
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from py_reference import golden_components
 from scalding_spark.functions import dedup
@@ -23,9 +22,10 @@ def _random_edges(rng, n_nodes, n_edges):
                   for _ in range(n_edges)) if a != b})
 
 
-def _spark_labels(spark, fn, edges):
+def _spark_labels(spark, edges, stats=None):
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    return {r.node: r.comp for r in fn(df).collect()}
+    return {r.node: r.comp for r in
+            dedup.connected_components(df, stats=stats).collect()}
 
 
 def _expected(edges):
@@ -35,20 +35,29 @@ def _expected(edges):
 
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [
     # sparse (forest-ish, many components), near-critical, dense (one
-    # giant component) — the three Erdős–Rényi regimes
-    (7, 200, 60), (8, 200, 190), (9, 120, 400),
+    # giant component) — the three Erdős–Rényi regimes — plus a sparse
+    # and a dense graph on other seeds
+    (7, 200, 60), (8, 200, 190), (9, 120, 400), (11, 200, 120), (12, 90, 300),
 ])
-def test_cc_label_matches_unionfind_random_graphs(spark, seed, n_nodes, n_edges):
-    edges = _random_edges(random.Random(seed), n_nodes, n_edges)
-    got = _spark_labels(spark, dedup.connected_components, edges)
-    assert got == _expected(edges)
-
-
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [(11, 200, 120), (12, 90, 300)])
 def test_cc_star_matches_unionfind_random_graphs(spark, seed, n_nodes, n_edges):
     edges = _random_edges(random.Random(seed), n_nodes, n_edges)
-    got = _spark_labels(spark, dedup.connected_components_star, edges)
-    assert got == _expected(edges)
+    assert _spark_labels(spark, edges) == _expected(edges)
+
+
+@pytest.mark.parametrize("edges,rounds", [
+    # 200 disjoint 5-cliques (the dedup shape); near-critical random graph
+    ([(5 * c + i, 5 * c + j) for c in range(200)
+      for i in range(5) for j in range(i + 1, 5)], 2),
+    (_random_edges(random.Random(8), 200, 190), 5),
+], ids=["cliques", "random"])
+def test_cc_round_counts_pinned(spark, edges, rounds):
+    """Exact rounds (the 200-edge path's 9 is pinned in test_cc_sampling).
+    The convergence fingerprint stops at the first round whose output
+    repeats its input's distinct edge set; one more round here means
+    convergence is detected late."""
+    stats = {}
+    assert _spark_labels(spark, edges, stats) == _expected(edges)
+    assert stats["iterations"] == rounds
 
 
 def test_dedup_clusters_pipeline_matches_unionfind(spark, sf_dir):

@@ -1,144 +1,65 @@
-"""Rotation discipline for the driver's 50-query correctness window.
+"""Invariants of the driver's 50-query correctness window.
 
-The driver checks only the FIRST 50 ``queries()`` entries per round, so
-with ~145 queries full re-verification takes ceil(N/50) = 3 rounds. These
-tests turn that schedule into enforced invariants (VERDICT r03 #1 /
-r04 #3) instead of a comment:
-
-1. every query has SOME driver row, sits in the current window, or is
-   explicitly ledgered as new;
-2. the window is a true ROTATION: never-checked queries first, then the
-   stalest (no query outside the window may be strictly staler than the
-   staleness tier the window is drawn from);
-3. staleness is bounded: every query was verified within the last
-   ceil(N/50) rounds, is in the current window, or is queued in the block
-   directly below position 50 (the next round's window).
+The driver checks only the FIRST 50 ``queries()`` entries per round.
+``queries()`` derives that order from the ``CORRECTNESS_r*.json`` round
+files (``__spark_entry__.window_order``): ``REVERIFY`` first, then
+never-checked queries, then the stalest — so a new round file needs no
+hand re-ordering.
 
 No Spark session — dict/JSON only.
 """
 
+import ast
+import inspect
 import json
-import math
-import os
 
 import __spark_entry__ as e
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
-
-# Entries added mid-round, awaiting their first driver run. The r05-new
-# operators lead the current window, so nothing is pending.
-PENDING_NEXT_ROTATION: set = set()
-
-
-def _last_rounds(exclude_newest: bool = False) -> dict:
-    """query -> newest round with a driver row (absent = never checked).
-
-    ``exclude_newest`` drops the single newest CORRECTNESS file — the
-    as-of-selection view: the driver writes round N's file AFTER the
-    round-N window was chosen, so rotation invariants about the CHOICE
-    must be judged against rounds < N."""
-    rounds = {}
-    for fn in os.listdir(HERE):
-        if fn.startswith("CORRECTNESS_r") and fn.endswith(".json"):
-            r = int(fn[len("CORRECTNESS_r"):-len(".json")])
-            rounds[r] = json.load(open(os.path.join(HERE, fn)))
-    if exclude_newest and rounds:
-        del rounds[max(rounds)]
-    last = {}
-    for r, data in rounds.items():
-        for k in data:
-            last[k] = max(last.get(k, 0), r)
-    return last
 
 
 def test_every_query_is_driver_checked_or_ledgered():
+    """Every registered query is reachable: ``queries()`` is a permutation
+    of the registry, and a query the round files have never seen sits
+    inside the window."""
     names = list(e.queries())
-    window = set(names[:WINDOW])
-    covered = set(_last_rounds()) | window | PENDING_NEXT_ROTATION
-    missing = [n for n in names if n not in covered]
-    assert not missing, (
-        f"queries() entries with NO driver row, outside the {WINDOW}-entry "
-        f"window, and not ledgered: {missing}")
-
-
-def test_pending_set_matches_reality():
-    names = set(e.queries())
-    assert PENDING_NEXT_ROTATION <= names
-    stale = PENDING_NEXT_ROTATION & set(_last_rounds())
-    assert not stale, f"ledgered-as-pending but already driver-checked: {stale}"
-
-
-def _rotation_violations(last, names, window):
-    """Queries strictly staler than the window's staleness tier that were
-    left OUTSIDE the window — empty iff the window is a true rotation."""
-    ages = sorted(last.get(n, -1) for n in names)
-    threshold = ages[min(WINDOW, len(names)) - 1]
-    return [n for n in names
-            if last.get(n, -1) < threshold and n not in window]
-
-
-def test_window_is_a_rotation_of_the_stalest():
-    """Never-checked queries must ALL be in the window; beyond those, the
-    window must be drawn from the stalest tiers — any query strictly
-    staler than the window's staleness threshold that is left outside
-    breaks the rotation.
-
-    The invariant is about the window's SELECTION, so it may be judged
-    against either the full driver history or the as-of-selection view
-    (all rounds except the newest): between the driver writing round N's
-    file and the round-N+1 rotation, the just-verified window is by
-    construction no longer "the stalest" under the full view — only a
-    window that fails BOTH views (e.g. one that was never rotated at all;
-    the stale view then shows the un-rotated window as fresh within one
-    round) breaks the rotation."""
-    names = list(e.queries())
-    window = set(names[:WINDOW])
-    last = _last_rounds()
+    assert sorted(names) == sorted(e._QUERIES)
+    last = e._last_checked(e._HERE)
     never = [n for n in names if n not in last]
-    out = [n for n in never if n not in window]
-    assert not out, f"never-driver-checked queries outside the window: {out}"
-    full_view = _rotation_violations(last, names, window)
-    if not full_view:
-        return
-    as_of_selection = _rotation_violations(
-        _last_rounds(exclude_newest=True), names, window)
-    assert not as_of_selection, (
-        f"window is not a rotation under the full history "
-        f"({len(full_view)} staler queries outside, e.g. {full_view[:5]}) "
-        f"NOR as of its selection round ({len(as_of_selection)} outside, "
-        f"e.g. {as_of_selection[:5]}) — rotate the window to the stalest "
-        f"50 (see MEMORY/r06-window-rotation-queue)")
-
-
-def test_staleness_is_bounded():
-    """Every query: verified within the last ceil(N/50) rounds, OR in the
-    current window (verified next round), OR queued directly below
-    position 50 (verified the round after) — the steady-state guarantee
-    that no driver row goes stale beyond one rotation cycle."""
-    names = list(e.queries())
-    last = _last_rounds()
-    if not last:
-        return
-    newest = max(last.values())
-    cycle = math.ceil(len(names) / WINDOW)
-    window = set(names[:WINDOW])
-    next_window = set(names[WINDOW:2 * WINDOW])
-    stale = [n for n in names
-             if last.get(n, newest) <= newest - cycle
-             and n not in window and n not in next_window]
-    assert not stale, (
-        f"queries with driver rows older than {cycle} rounds, neither in "
-        f"the current window nor queued for the next: {stale}")
+    assert set(never) <= set(names[:WINDOW]), never
 
 
 def test_no_duplicate_query_keys():
-    """The rotation moves entries between the window and the tail; a key
-    accidentally left in both places silently shadows (dict literal keeps
-    the LAST) and shrinks the effective window."""
-    import ast, inspect
-    src = inspect.getsource(e.queries)
-    d = next(n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.Dict))
-    keys = [k.value for k in d.keys]
+    """A key written twice in the registry literal silently shadows (the
+    dict keeps the LAST) and shrinks the registry."""
+    tree = ast.parse(inspect.getsource(e))
+    reg = next(n.value for n in ast.walk(tree)
+               if isinstance(n, ast.AnnAssign)
+               and getattr(n.target, "id", None) == "_QUERIES")
+    keys = [k.value for k in reg.keys]
     dupes = {k for k in keys if keys.count(k) > 1}
-    assert not dupes, f"duplicate queries() keys: {dupes}"
+    assert not dupes, f"duplicate registry keys: {dupes}"
+
+
+def test_reverify_names_are_registered():
+    assert set(e.REVERIFY) <= set(e._QUERIES)
+    assert list(e.queries())[:len(e.REVERIFY)] == list(e.REVERIFY)
+
+
+def test_window_is_a_rotation_of_the_stalest(tmp_path):
+    """A synthetic round history: REVERIFY leads, then the never-checked
+    query, then staler before fresher; ties keep registry order. Adding a
+    newer round file re-orders without touching the registry."""
+    names = ["q_old", "q_new", "q_mid", "q_never", *e.REVERIFY]
+    (tmp_path / "CORRECTNESS_r03.json").write_text(
+        json.dumps({n: {} for n in ["q_old", "q_new", "q_mid"]}))
+    (tmp_path / "CORRECTNESS_r05.json").write_text(
+        json.dumps({"q_mid": {}, e.REVERIFY[0]: {}}))
+    (tmp_path / "CORRECTNESS_r11.json").write_text(
+        json.dumps({"q_new": {}}))
+    assert e.window_order(names, str(tmp_path)) == [
+        *e.REVERIFY, "q_never", "q_old", "q_mid", "q_new"]
+    (tmp_path / "CORRECTNESS_r12.json").write_text(
+        json.dumps({"q_old": {}, "q_never": {}}))
+    assert e.window_order(names, str(tmp_path)) == [
+        *e.REVERIFY, "q_mid", "q_new", "q_old", "q_never"]

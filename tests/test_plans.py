@@ -564,7 +564,7 @@ def test_star_cc_riding_dedup_single_exchange_per_star(spark):
     p = plan(round_frame)
     ex = [l for l in p.splitlines() if re.search(r"\bExchange\b", l)]
     assert len(ex) == 1, p
-    src = inspect.getsource(dedup.connected_components_star)
+    src = inspect.getsource(dedup.connected_components)
     loop = src[src.index("for _ in range(max_iter)"):
                src.index("if stats is not None")]
     assert ".distinct()" not in loop, "round-end distinct exchange is back"
@@ -577,48 +577,6 @@ def test_star_cc_riding_dedup_single_exchange_per_star(spark):
     init = src[:src.index("for _ in range(max_iter)")]
     assert init.index("e = materialize") < init.index(
         "all_nodes = materialize"), "all_nodes no longer reads e's cut"
-
-
-def test_cc_round_join_reuses_sym_partitioning(spark):
-    """connected_components' per-round join (VERDICT r09 #2): the
-    symmetrized edge list persists ALREADY hash-partitioned on the join
-    key `b`, so each iteration's `sym.join(labels, sym.b == labels.node)`
-    reads the cache with NO Exchange on the sym side — only the
-    node-sized labels side moves. Reproduces the round shape exactly
-    (broadcast disabled so the SMJ/SHJ requirement is exercised — on a
-    real corpus the labels side is node-sized, never broadcast) and pins
-    the source too."""
-    import inspect
-    src_txt = inspect.getsource(dedup.connected_components)
-    assert 'repartition(F.col("b"))' in src_txt, \
-        "sym must persist pre-partitioned on the join key"
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        e = spark.createDataFrame(
-            [(i, i + 1) for i in range(50)], "src long, dst long")
-        ee = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        sym = (ee.union(ee.select(F.col("b").alias("a"),
-                                  F.col("a").alias("b")))
-               .distinct().repartition(F.col("b")).persist())
-        try:
-            sym.count()
-            labels = (sym.select(F.col("a").alias("node")).distinct()
-                      .select("node", F.col("node").alias("comp"))
-                      .localCheckpoint(True))
-            j = (sym.join(labels, sym.b == labels.node)
-                 .select(sym.a.alias("node"), F.col("comp")))
-            j.collect()
-            outer = plan(j).split("InMemoryRelation")[0]
-            assert "InMemoryTableScan" in outer
-            assert "Exchange" not in outer, (
-                "per-round join exchanges the persisted sym side:\n" + outer)
-        finally:
-            sym.unpersist()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
 def test_image_neardup_shuffles_hashes_never_bytes(spark):
