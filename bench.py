@@ -4,9 +4,17 @@ JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ..
 
 Each query is fully materialized via the noop sink (forces every operator,
 no driver collect overhead in the timing).
+
+    python bench.py                     # every HEADLINE query; mirrors BENCH_LAST.json
+    python bench.py --queries q1,q2     # same session and protocol, listed queries only
+    python bench.py --explain DIR       # write DIR/<q>.txt formatted plans, no timing
+
+The bench session (``bench_session``) and the timing protocol
+(``time_query``) live only here; other scripts import them.
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -16,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MIRROR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json")
 
 HEADLINE = [
     "q1_pricing_summary",        # scan + filter + multi-agg
@@ -107,15 +116,15 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
+def bench_session(app_name: str = "scalding_spark_bench",
+                  extra_conf: dict[str, str] | None = None):
+    """The driver-like bench session. ``extra_conf`` entries apply last, so
+    they override the defaults below."""
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    import __spark_entry__ as entry_mod
-
-    spark = (
+    builder = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("scalding_spark_bench")
+        .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
@@ -125,51 +134,102 @@ def main() -> None:
         # finite tail window before (r10's record was unparseable for
         # exactly this reason).
         .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
     )
+    for k, v in (extra_conf or {}).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def time_query(spark, fn) -> list[float]:
+    """Every timed run of ``fn`` under the bench protocol; runs[0] is the
+    cold run and min(runs) the reported time."""
+    from scalding_spark.session import release_materialized
+
+    def once() -> float:
+        t0 = time.time()
+        fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+        return time.time() - t0
+
+    # Two runs, report the min: the first run pays whole-stage-codegen
+    # JIT for the query's generated code (seconds for wide expressions);
+    # steady-state is what a long-running cluster job sees. The box is a
+    # shared-host VM with multi-second CPU-steal bursts (observed 4-10x
+    # inflation on identical back-to-back runs), so when the samples
+    # disagree wildly the min itself is suspect — take up to two more.
+    runs = [once(), once()]
+    # accept the min once a second sample corroborates it within 1.5x
+    while len(runs) < 4 and min(runs) > 0.3 \
+            and sorted(runs)[1] / sorted(runs)[0] > 1.5:
+        runs.append(once())
+    # long queries get one mandatory extra sample: a steal burst that
+    # spans both initial runs inflates them AGREEING with each other,
+    # which the ratio guard can't see (observed: 8.5s kmeans timed
+    # 18.8s twice in a row inside one burst)
+    if min(runs) > 5.0 and len(runs) < 4:
+        runs.append(once())
+    # free library-internal persists between queries (ledger path) so a
+    # 60-query session doesn't accumulate input-sized cache entries
+    release_materialized(spark)
+    return runs
+
+
+def explain(spark, qs, names: list[str], out_dir: str) -> None:
+    """Write each query's formatted physical plan to ``out_dir/<q>.txt``."""
+    from scalding_spark.session import release_materialized
+
+    os.makedirs(out_dir, exist_ok=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for name in names:
+        plan = qs[name](spark, SF_DIR)._jdf.queryExecution().explainString(mode)
+        release_materialized(spark)
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)", flush=True)
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Parse and validate the flags; exits 2 with usage before any JVM starts."""
+    import __spark_entry__ as entry_mod
+
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--queries", metavar="q,q,...", default=HEADLINE,
+                   type=lambda s: [q for q in s.split(",") if q],
+                   help="queries to run, in this order (default: HEADLINE)")
+    p.add_argument("--explain", metavar="DIR",
+                   help="write DIR/<q>.txt formatted plans instead of timing")
+    args = p.parse_args(argv)
+    unknown = set(args.queries) - set(entry_mod.queries())
+    if unknown:
+        p.error(f"unknown queries: {', '.join(sorted(unknown))}")
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = parse_args(argv)
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry_mod
+
+    spark = bench_session()
+    qs = entry_mod.queries()
+    if args.explain:
+        explain(spark, qs, args.queries, args.explain)
+        return
 
     # Warm-up: JIT/codegen + FS cache, so q1 doesn't pay JVM startup.
     spark.range(1_000_000).agg(F.sum("id")).write.mode("overwrite").format("noop").save()
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1000) \
         .write.mode("overwrite").format("noop").save()
 
-    qs = entry_mod.queries()
     timings: dict[str, float] = {}
     first_runs: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        # Two runs, report the min: the first run pays whole-stage-codegen
-        # JIT for the query's generated code (seconds for wide expressions);
-        # steady-state is what a long-running cluster job sees. The box is a
-        # shared-host VM with multi-second CPU-steal bursts (observed 4-10x
-        # inflation on identical back-to-back runs), so when the samples
-        # disagree wildly the min itself is suspect — take up to two more.
-        runs: list[float] = []
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
-        # accept the min once a second sample corroborates it within 1.5x
-        while len(runs) < 4 and min(runs) > 0.3 \
-                and sorted(runs)[1] / sorted(runs)[0] > 1.5:
-            t0 = time.time()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
-        # long queries get one mandatory extra sample: a steal burst that
-        # spans both initial runs inflates them AGREEING with each other,
-        # which the ratio guard can't see (observed: 8.5s kmeans timed
-        # 18.8s twice in a row inside one burst)
-        if min(runs) > 5.0 and len(runs) < 4:
-            t0 = time.time()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
+    for name in args.queries:
+        runs = time_query(spark, qs[name])
         timings[name] = round(min(runs), 3)
         first_runs[name] = round(runs[0], 3)
-        # free library-internal persists between queries (ledger path) so a
-        # 60-query session doesn't accumulate input-sized cache entries
-        from scalding_spark.session import release_materialized
-        release_materialized(spark)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -177,8 +237,9 @@ def main() -> None:
     except ValueError:
         sf_val = sf
     total = round(sum(timings.values()), 3)
+    full = args.queries == HEADLINE
     record = {
-        "metric": "headline_total",
+        "metric": "headline_total" if full else "queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
@@ -192,12 +253,14 @@ def main() -> None:
     line = json.dumps(record)
     # Mirror the record to a file so a clipped/noisy stdout capture can
     # never lose the round's numbers (the JSON line stays authoritative).
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_LAST.json"), "w") as fh:
-            fh.write(line + "\n")
-    except OSError:
-        pass  # read-only checkout: the printed line still satisfies the contract
+    # Only a full HEADLINE run is a round record; a subset must not
+    # overwrite it.
+    if full:
+        try:
+            with open(MIRROR, "w") as fh:
+                fh.write(line + "\n")
+        except OSError:
+            pass  # read-only checkout: the printed line still satisfies the contract
     print(line)
 
 

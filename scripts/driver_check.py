@@ -4,8 +4,10 @@ sf dir, comparing row count + order-insensitive value hash.
 
 Usage: python scripts/driver_check.py [sf_dir] [only_query ...]
 
-SPARK_GRAFT_GATE_CONF can carry extra session confs as "k=v,k=v" — used
-for configuration-axis campaigns (e.g. the full gate with AQE disabled:
+The session is bench.py's bench_session (local[$SPARK_GRAFT_CPUS]).
+SPARK_GRAFT_GATE_CONF can carry extra session confs as "k=v,k=v"; they apply
+last, so they override the bench defaults — used for configuration-axis
+campaigns (e.g. the full gate with AQE disabled:
 SPARK_GRAFT_GATE_CONF=spark.sql.adaptive.enabled=false).
 """
 import math
@@ -19,9 +21,9 @@ sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = set(sys.argv[2:])
 
 import duckdb
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as e
+import bench
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -42,15 +44,11 @@ def norm(rows, cols):
     return sorted(tuple(nv(r[i]) for i in idx) for r in rows)
 
 
-builder = (SparkSession.builder.master("local[8]").appName("driver_check")
-           .config("spark.sql.shuffle.partitions", "16")
-           .config("spark.sql.adaptive.enabled", "true")
-           .config("spark.driver.memory", "8g"))
+gate_conf = {}
 for kv in filter(None, os.environ.get("SPARK_GRAFT_GATE_CONF", "").split(",")):
     k, _, v = kv.partition("=")
-    builder = builder.config(k.strip(), v.strip())
-spark = builder.getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
+    gate_conf[k.strip()] = v.strip()
+spark = bench.bench_session("driver_check", gate_conf)
 
 t0 = time.time()
 res = e.entry(spark)

@@ -345,7 +345,7 @@ ITER_OPS = {
 
 def main():
     only = set(sys.argv[1:])
-    spark = get_spark(app_name="scaling", shuffle_partitions=32)
+    spark = get_spark(app_name="scaling")
     scales = [
         (500, "/root/testdata/sf0.01/documents.parquet"),
         (5000, "/root/testdata/sf0.1/documents.parquet"),

@@ -111,7 +111,7 @@ def check_fuzzy_join(spark) -> bool:
 
 def main():
     from scalding_spark.session import get_spark, release_materialized
-    spark = get_spark(app_name="sf1_parity", shuffle_partitions=32)
+    spark = get_spark(app_name="sf1_parity")
     ok = True
     for check in (check_dedup_clusters, check_fuzzy_join):
         ok = check(spark) and ok

@@ -142,7 +142,7 @@ def bench_tier(spark, tier: str) -> dict:
 
 
 def main():
-    spark = get_spark(app_name="streaming_bench", shuffle_partitions=32)
+    spark = get_spark(app_name="streaming_bench")
     spark.sparkContext.setLogLevel("ERROR")
     results = []
     for tier in TIERS:
