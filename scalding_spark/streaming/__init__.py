@@ -16,6 +16,7 @@ and dies at 100 TB/day.
 
 from __future__ import annotations
 
+import hashlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -192,7 +193,7 @@ def _read_store(spark, store_path: str):
 
 
 def _reject_reserved_batch_col(stream_df: DataFrame) -> None:
-    """All three ingest tiers partition the corpus and store by a
+    """All four ingest tiers partition the corpus and store by a
     ``__batch`` (checkpoint-id, epoch) column they add themselves; an
     input frame already carrying one would be silently overwritten in
     the corpus output (ADVICE r07 #4's collision class). Fail at builder
@@ -212,7 +213,7 @@ def _validate_compact_every(n: int | None) -> None:
 
 def _maybe_compact(spark, epoch_id: int, every: int | None,
                    *paths: str) -> None:
-    """End-of-epoch compaction hook shared by the three ingest tiers:
+    """End-of-epoch compaction hook shared by the four ingest tiers:
     every ``every`` epochs, consolidate closed ``__batch`` partitions of
     each path (:func:`compact_store`). Runs INSIDE foreachBatch — the
     only writer — after the epoch's own writes, so the just-written
@@ -247,36 +248,97 @@ def _maybe_compact(spark, epoch_id: int, every: int | None,
                           stacklevel=2)
 
 
+def _epoch_ingest(stream_df: DataFrame, corpus_path: str, store_path: str,
+                  checkpoint: str, vet, compact_every_n_epochs: int | None,
+                  available_now: bool, store_parts: tuple[str, ...] = ()):
+    """The crash/replay commit protocol of every ``stream_ingest_*`` tier;
+    the tier supplies only its vetting. Returns the started
+    StreamingQuery.
+
+    Per epoch (foreachBatch, so each side-effecting write happens exactly
+    once per epoch under the checkpoint):
+
+    1. ``vet(batch, read_store) -> (kept, store_rows)``: the tier drops
+       within-batch and stored duplicates. ``read_store()`` returns the
+       store minus this epoch's own partition, or None before the first
+       write. It is a thunk so a tier reads (and checks) the store only
+       when it has something to probe with;
+    2. ``novel = kept.localCheckpoint()``: one computation, two sinks —
+       otherwise the store write re-runs the whole vetting lineage;
+    3. ``novel`` lands in ``corpus_path`` and ``store_rows(novel)`` in
+       ``store_path`` (also partitioned by ``store_parts``), both in a
+       ``__batch=<md5(checkpoint)[:12]>-<epoch>`` partition under
+       per-write dynamic-partition OVERWRITE (not the session conf —
+       foreachBatch shares the caller's session and must not mutate it);
+    4. :func:`_maybe_compact` every ``compact_every_n_epochs`` epochs.
+
+    The store append is read back by the NEXT epoch's vetting, so dedup is
+    cumulative across the stream's lifetime without any in-memory state.
+    The partition namespace is stable across restarts of THIS checkpoint,
+    so an epoch replayed after a mid-write crash rewrites its own
+    partition instead of appending duplicates, while a FRESH checkpoint
+    pointed at the same outputs writes a disjoint namespace and cannot
+    clobber earlier runs. The replay hole: a crash mid store-write can
+    leave this epoch's partition partially committed; vetting against it
+    would flag the epoch's own docs as duplicates and the dynamic
+    overwrite would then drop them from corpus AND store forever, so
+    ``read_store`` excludes it (a partition-pruned filter — the scan
+    skips the directory entirely).
+    """
+    _reject_reserved_batch_col(stream_df)
+    _validate_compact_every(compact_every_n_epochs)
+    run_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+
+    def ingest(batch: DataFrame, epoch_id: int) -> None:
+        spark = batch.sparkSession
+        tag = f"{run_tag}-{int(epoch_id)}"
+
+        def read_store():
+            store = _read_store(spark, store_path)
+            return None if store is None else store.where(
+                F.col("__batch") != tag)
+
+        def write(rows: DataFrame, path: str, parts=()) -> None:
+            (rows.withColumn("__batch", F.lit(tag))
+             .write.mode("overwrite").partitionBy("__batch", *parts)
+             .option("partitionOverwriteMode", "dynamic")
+             .parquet(path))
+
+        kept, store_rows = vet(batch, read_store)
+        novel = kept.localCheckpoint()
+        write(novel, corpus_path)
+        write(store_rows(novel), store_path, store_parts)
+        _maybe_compact(spark, epoch_id, compact_every_n_epochs,
+                       store_path, corpus_path)
+
+    w = (stream_df.writeStream.foreachBatch(ingest)
+         .option("checkpointLocation", checkpoint))
+    if available_now:
+        w = w.trigger(availableNow=True)
+    return w.start()
+
+
 def stream_ingest_dedup(stream_df: DataFrame, corpus_path: str,
                         store_path: str, checkpoint: str, text_col: str,
-                        id_col: str, use_bloom: bool = True,
-                        bloom_fpp: float = 0.01,
-                        available_now: bool = True,
+                        id_col: str, available_now: bool = True,
                         compact_every_n_epochs: int | None = None):
     """Streaming incremental corpus ingestion: every micro-batch is
     deduped against the persistent fingerprint store, novel docs append to
     the corpus, and their fingerprints advance the store — the streaming
     shape of examples/incremental_corpus_job.py.
 
-    Per batch (foreachBatch, so each side-effecting write happens exactly
-    once per epoch under the checkpoint):
+    Per batch (foreachBatch):
 
     1. within-batch exact dedup (a batch can repeat itself; min ``id_col``
        wins);
-    2. :func:`dedup.dedup_against_fingerprints` vs the store —
-       ``use_bloom`` routes definitely-new docs around the anti-join
+    2. :func:`dedup.dedup_against_fingerprints` vs the store — its bloom
+       prefilter routes definitely-new docs around the anti-join
        exchange (the normal-case majority at a healthy crawl);
     3. novel docs append to ``corpus_path``; their fingerprints append to
        ``store_path``.
 
-    The store append is read back by the NEXT batch's step 2, so dedup is
-    cumulative across the stream's lifetime without any in-memory state;
-    the state size is 32 bytes/doc on disk, not in the state store. Both
-    writes land in a ``__batch`` partition keyed by (checkpoint-id, epoch)
-    under dynamic-partition OVERWRITE, so a replayed epoch rewrites its own
-    partition instead of appending duplicates — idempotent under
-    foreachBatch's replay semantics — while a fresh checkpoint writes a
-    disjoint partition namespace. Returns the started StreamingQuery.
+    The store's state size is 32 bytes/doc on disk, not in the state
+    store. Crash/replay semantics: see :func:`_epoch_ingest`.
 
     ``compact_every_n_epochs=N``: every N epochs the tier runs
     :func:`compact_store` on the store AND corpus at the END of the
@@ -292,47 +354,18 @@ def stream_ingest_dedup(stream_df: DataFrame, corpus_path: str,
     from scalding_spark.functions.dedup import (dedup_against_fingerprints,
                                                 exact_dedup)
     from scalding_spark.functions.text import normalize_for_fingerprint
-    import hashlib
-    _reject_reserved_batch_col(stream_df)
-    _validate_compact_every(compact_every_n_epochs)
-    run_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
+    def vet(batch: DataFrame, read_store):
         batch = exact_dedup(batch, text_col, id_col)
-        seen = _read_store(spark, store_path)
+        seen = read_store()
         if seen is not None:
-            # replay hole: a crash mid store-write can leave THIS epoch's
-            # partition partially committed; reading it back would flag the
-            # already-written docs as duplicates and the dynamic overwrite
-            # would then drop them from corpus AND store forever. Exclude
-            # the epoch's own namespace (a partition-pruned filter — the
-            # scan skips the directory entirely).
-            seen = seen.where(F.col("__batch") != f"{run_tag}-{int(epoch_id)}")
             batch = dedup_against_fingerprints(batch, seen, text_col,
-                                               use_bloom=use_bloom,
-                                               bloom_fpp=bloom_fpp)
-        # one computation, two sinks: materialize novel ONCE (otherwise the
-        # fingerprint write re-runs the whole dedup lineage)
-        novel = batch.localCheckpoint()
-        tag = F.lit(f"{run_tag}-{int(epoch_id)}")
-        (novel.withColumn("__batch", tag)
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(corpus_path))
-        (novel.select(F.md5(normalize_for_fingerprint(F.col(text_col)))
-                      .alias("fp"), tag.alias("__batch"))
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(store_path))
-        _maybe_compact(spark, epoch_id, compact_every_n_epochs,
-                       store_path, corpus_path)
+                                               use_bloom=True)
+        return batch, lambda novel: novel.select(
+            F.md5(normalize_for_fingerprint(F.col(text_col))).alias("fp"))
 
-    w = (stream_df.writeStream.foreachBatch(ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _epoch_ingest(stream_df, corpus_path, store_path, checkpoint,
+                         vet, compact_every_n_epochs, available_now)
 
 
 def _is_aggregating(df: DataFrame) -> bool:

@@ -31,12 +31,8 @@ def stream_ingest_neardup(stream_df: DataFrame, corpus_path: str,
        never shuffled — candidates verified by the same estimator
        (stderr ≈ 1/√num_hashes);
     4. novel docs land in ``corpus_path``, their signatures in
-       ``store_path``, both written into a ``__batch`` partition keyed by
-       (checkpoint-id, epoch) with dynamic-partition OVERWRITE — an epoch
-       replayed after a mid-write crash rewrites its own partition instead
-       of appending duplicates (idempotent under the checkpoint's replay
-       semantics), while a FRESH checkpoint pointed at the same outputs
-       gets its own partition namespace and cannot clobber earlier runs.
+       ``store_path``; crash/replay semantics: see
+       :func:`scalding_spark.streaming._epoch_ingest`.
 
     Exact duplicates of stored docs estimate at 1.0 and are caught by the
     same probe; token-less docs carry no signature and always pass.
@@ -54,20 +50,11 @@ def stream_ingest_neardup(stream_df: DataFrame, corpus_path: str,
                                                 minhash_band_hashes,
                                                 minhash_signatures,
                                                 signature_jaccard)
-    import hashlib
+    from scalding_spark.streaming import _epoch_ingest
     bh = minhash_band_hashes(num_hashes, bands)
     thr = F.lit(float(threshold))
-    # partition namespace: stable across restarts of THIS checkpoint (so a
-    # replayed epoch overwrites itself), distinct for a fresh checkpoint
-    # (so it cannot overwrite partitions an earlier run wrote)
-    from scalding_spark.streaming import (_reject_reserved_batch_col,
-                                          _validate_compact_every)
-    _reject_reserved_batch_col(stream_df)
-    _validate_compact_every(compact_every_n_epochs)
-    run_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
+    def vet(batch: DataFrame, read_store):
         batch = exact_dedup(batch, text_col, id_col)
         # ONE signature pass per batch; localCheckpoint: sigs feed the
         # self-join (twice), the store probe, and the store write — and
@@ -99,16 +86,8 @@ def stream_ingest_neardup(stream_df: DataFrame, corpus_path: str,
                          "id", "left_anti")
         bbands = bbands.join(losers, "bid", "left_anti")
         bsigs = bsigs.join(losers, "bid", "left_anti")
-        from scalding_spark.streaming import _read_store
-        store = _read_store(spark, store_path)
+        store = read_store()
         if store is not None:
-            # replay hole: exclude THIS epoch's own (possibly partially
-            # committed) partition from the store read — otherwise a
-            # replayed epoch sees its own docs as "already stored" and the
-            # dynamic overwrite then erases them from corpus and store.
-            # Partition-pruned filter: the scan skips the directory.
-            store = store.where(
-                F.col("__batch") != f"{run_tag}-{int(epoch_id)}")
             store_bands = store.select(
                 F.col("id").alias("sid"), F.posexplode(bh).alias("band", "h"))
             cands = (store_bands
@@ -121,25 +100,8 @@ def stream_ingest_neardup(stream_df: DataFrame, corpus_path: str,
                                              num_hashes) >= thr)
                     .select(F.col("bid").alias(id_col)).distinct())
             batch = batch.join(dups, id_col, "left_anti")
-        novel = batch.localCheckpoint()
-        tag = F.lit(f"{run_tag}-{int(epoch_id)}")
-        # per-WRITE dynamic overwrite (not the session conf — foreachBatch
-        # shares the caller's session and must not mutate it)
-        (novel.withColumn("__batch", tag)
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(corpus_path))
-        (sigs.join(novel.select(F.col(id_col).alias("id")), "id")
-         .withColumn("__batch", tag)
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(store_path))
-        from scalding_spark.streaming import _maybe_compact
-        _maybe_compact(spark, epoch_id, compact_every_n_epochs,
-                       store_path, corpus_path)
+        return batch, lambda novel: sigs.join(
+            novel.select(F.col(id_col).alias("id")), "id")
 
-    w = (stream_df.writeStream.foreachBatch(ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _epoch_ingest(stream_df, corpus_path, store_path, checkpoint,
+                         vet, compact_every_n_epochs, available_now)

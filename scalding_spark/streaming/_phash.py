@@ -43,10 +43,9 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
        (bit_count on the scanned hash), so the store pays one scan per
        micro-batch, not two like the MinHash tier's estimator verify;
     4. novel images land in ``corpus_path``, their hashes in
-       ``store_path``, both in a ``__batch=(checkpoint-id)-(epoch)``
-       dynamic-OVERWRITE partition with the replay-hole exclusion —
-       identical crash/replay contract to the other three tiers, and
-       ``compact_every_n_epochs`` hooks the same compactor.
+       ``store_path``; crash/replay semantics and the
+       ``compact_every_n_epochs`` hook: see
+       :func:`scalding_spark.streaming._epoch_ingest`.
 
     Contracts: NULL-content rows are KEPT and never stored (no pixels →
     cannot be vetted, can never vet; the NULL-vector rule); undecodable
@@ -64,16 +63,11 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
     semantic tier's ``__bucket`` recipe) so the broadcast probe prunes
     directories; the chunking already matches.
     """
-    import hashlib
-
     from scalding_spark.functions.dedup import hamming_chunk_cols
     from scalding_spark.functions.multimodal import (audio_ehash,
                                                      image_ahash,
                                                      image_dhash)
-    from scalding_spark.streaming import (_reject_reserved_batch_col,
-                                          _validate_compact_every)
-    _reject_reserved_batch_col(stream_df)
-    _validate_compact_every(compact_every_n_epochs)
+    from scalding_spark.streaming import _epoch_ingest
     # the tier is modality-agnostic past the hash pass: "aehash" ingests
     # AUDIO blobs (multimodal.audio_ehash — r11) through the identical
     # store-probe/banding machinery
@@ -84,10 +78,8 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
     # validate the hamming budget at BUILDER time (a bad budget must not
     # surface as a per-epoch failure inside foreachBatch)
     hamming_chunk_cols("__ph", max_hamming)
-    run_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
+    def vet(batch: DataFrame, read_store):
         batch = batch.dropDuplicates([id_col])
         # ONE hash pass; localCheckpoint: the hashes feed the self-join
         # (twice), the store probe, and the store write — and release
@@ -136,13 +128,8 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
         hs = hs.join(losers, "id", "left_anti")
         bchunks = bchunks.join(losers.withColumnRenamed("id", "bid"),
                                "bid", "left_anti")
-        from scalding_spark.streaming import _read_store
-        store = _read_store(spark, store_path)
+        store = read_store()
         if store is not None:
-            # replay hole: this epoch's own (possibly partially
-            # committed) partition must not vet its own replay
-            store = store.where(
-                F.col("__batch") != f"{run_tag}-{int(epoch_id)}")
             store_chunks = store.select(
                 F.col("phash"),
                 F.explode(hamming_chunk_cols("phash", max_hamming))
@@ -152,24 +139,9 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
                         F.col("bph"))) <= max_hamming)
                     .select(F.col("bid").alias(id_col)).distinct())
             batch = batch.join(dups, id_col, "left_anti")
-        novel = batch.localCheckpoint()
-        tag = F.lit(f"{run_tag}-{int(epoch_id)}")
-        (novel.withColumn("__batch", tag)
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(corpus_path))
-        (hs.join(novel.select(F.col(id_col).alias("id")), "id")
-         .select("id", F.col("__ph").alias("phash"))
-         .withColumn("__batch", tag)
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(store_path))
-        from scalding_spark.streaming import _maybe_compact
-        _maybe_compact(spark, epoch_id, compact_every_n_epochs,
-                       store_path, corpus_path)
+        return batch, lambda novel: (
+            hs.join(novel.select(F.col(id_col).alias("id")), "id")
+            .select("id", F.col("__ph").alias("phash")))
 
-    w = (stream_df.writeStream.foreachBatch(ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _epoch_ingest(stream_df, corpus_path, store_path, checkpoint,
+                         vet, compact_every_n_epochs, available_now)

@@ -50,12 +50,8 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
        only matched batch IDS cross the exchange, ≡
        ``similarity.semantic_decontaminate(batch, stored)`` semantics;
     4. novel docs land in ``corpus_path``, their normalized vectors in
-       ``store_path``, both in a ``__batch`` partition keyed by
-       (checkpoint-id, epoch) with dynamic-partition OVERWRITE — a
-       replayed epoch rewrites its own partition (idempotent), a fresh
-       checkpoint writes a disjoint namespace, and the store read
-       excludes the epoch's own possibly-partially-committed partition
-       (the replay hole, same as the other two tiers).
+       ``store_path``; crash/replay semantics: see
+       :func:`scalding_spark.streaming._epoch_ingest`.
 
     Contracts shared with the similarity family: NULL-vector docs are
     KEPT and never stored (no position in space → cannot be vetted, and
@@ -109,12 +105,7 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
     from scalding_spark.functions.similarity import (_drop_null_vecs,
                                                      lsh_bucket,
                                                      random_hyperplanes)
-    import hashlib
-    from scalding_spark.streaming import (_reject_reserved_batch_col,
-                                          _validate_compact_every)
-    _reject_reserved_batch_col(stream_df)
-    _validate_compact_every(compact_every_n_epochs)
-    run_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+    from scalding_spark.streaming import _epoch_ingest
     thr = float(threshold)
     if store_buckets is not None and not 1 <= store_buckets <= 16:
         raise ValueError(
@@ -138,8 +129,7 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
                 f"built for dim {len(planes[0][0])}, batch has {dim}")
         return planes[0]
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
+    def vet(batch: DataFrame, read_store):
         batch = batch.dropDuplicates([id_col])
         # (r08: the probes run driver-side/numpy now — NO internal
         # columns are added to the user's frame, so the ADVICE r07 #4
@@ -178,14 +168,13 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
             dropped = _within_batch_hits(barr, thr)
             if dropped:
                 from pyspark.sql.types import StructField, StructType
-                ddf = spark.createDataFrame(
+                ddf = batch.sparkSession.createDataFrame(
                     [(i,) for i in dropped],
                     StructType([StructField(
                         id_col, valid.schema[id_col].dataType)]))
                 batch = batch.join(F.broadcast(ddf), id_col, "left_anti")
             # vs the store: map-only scan emitting matched batch ids only
-            from scalding_spark.streaming import _read_store
-            store = _read_store(spark, store_path)
+            store = read_store()
             if store is not None:
                 stored_elem = store.schema["vecn"].dataType.elementType \
                     .simpleString()
@@ -208,8 +197,6 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
                         f"store was written under (silently "
                         f"{'ignoring' if has_buckets else 'fabricating'} "
                         f"buckets would corrupt dedup)")
-                store = store.where(
-                    F.col("__batch") != f"{run_tag}-{int(epoch_id)}")
                 if store_buckets is not None:
                     # multi-probe partition pruning: only the batch's
                     # buckets (± probe_hamming bit flips) are scanned
@@ -221,12 +208,9 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
                     store, barr, thr, id_col,
                     valid.schema[id_col].dataType)
                 batch = batch.join(dup_ids, id_col, "left_anti")
-        novel = batch.localCheckpoint()
-        tag = F.lit(f"{run_tag}-{int(epoch_id)}")
-        (novel.withColumn("__batch", tag)
-         .write.mode("overwrite").partitionBy("__batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(corpus_path))
+        return batch, store_rows
+
+    def store_rows(novel: DataFrame) -> DataFrame:
         vecn = _normalized(vec_col)
         if store_dtype == "float32":
             # narrow at WRITE time: the rounding happens exactly once,
@@ -236,28 +220,19 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
             vecn = vecn.cast("array<float>")
         wdf = (_drop_null_vecs(novel, vec_col)
                .select(F.col(id_col).alias("id"), vecn.alias("vecn"))
-               .where(F.exists(F.col("vecn"), lambda x: x != 0))
-               .withColumn("__batch", tag))
-        part_cols = ["__batch"]
-        if store_buckets is not None:
-            # bucket on the NORMALIZED vector — same sign pattern as the
-            # raw vector (positive scaling), same id the probe computes
-            bexpr = (lsh_bucket(F.col("vecn"), planes[0]) if planes
-                     else F.lit(0).cast("bigint"))  # empty write only
-            wdf = wdf.withColumn("__bucket", bexpr)
-            part_cols.append("__bucket")
-        (wdf.write.mode("overwrite").partitionBy(*part_cols)
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(store_path))
-        from scalding_spark.streaming import _maybe_compact
-        _maybe_compact(spark, epoch_id, compact_every_n_epochs,
-                       store_path, corpus_path)
+               .where(F.exists(F.col("vecn"), lambda x: x != 0)))
+        if store_buckets is None:
+            return wdf
+        # bucket on the NORMALIZED vector — same sign pattern as the
+        # raw vector (positive scaling), same id the probe computes
+        bexpr = (lsh_bucket(F.col("vecn"), planes[0]) if planes
+                 else F.lit(0).cast("bigint"))  # empty write only
+        return wdf.withColumn("__bucket", bexpr)
 
-    w = (stream_df.writeStream.foreachBatch(ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _epoch_ingest(stream_df, corpus_path, store_path, checkpoint,
+                         vet, compact_every_n_epochs, available_now,
+                         store_parts=() if store_buckets is None
+                         else ("__bucket",))
 
 
 def _within_batch_hits(barr, thr: float) -> list:

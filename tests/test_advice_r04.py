@@ -2,15 +2,17 @@
 
 1. fold zero typing: a fractional zero over an integral column must promote
    to double, not truncate (grouping._aligned_zero / typed.fold_left).
-2. stream_ingest_dedup / stream_ingest_neardup epoch replay: a replayed
-   epoch must NOT read its own partially-committed store partition, or the
-   dynamic overwrite permanently loses those docs.
+2. epoch replay, every stream_ingest_* tier: a replayed epoch must NOT
+   read its own partially-committed store partition, or the dynamic
+   overwrite permanently loses those docs.
 3. counters(): non-blocking timeout probe, per-session scoping, clear.
 4. materialize(): strategy dispatch (local/persist/reliable) returns the
    same rows; invalid mode fails loudly.
 """
 
 import hashlib
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,61 +62,71 @@ def test_groupbuilder_fold_string_zero_unchanged(spark):
 
 # --- 2. epoch-replay hole ----------------------------------------------------
 
-DOC_SCHEMA = "doc_id long, text string"
+_NEAR_BASE = ("the quick brown fox jumps over the lazy dog while seven "
+              "wizards quietly brew hex elixirs beneath the old bridge")
+_NEAR_OTHER = ("completely different text about spark plans catalyst "
+               "tungsten and arrow batches flowing")
 
 
-def test_stream_ingest_dedup_replay_skips_own_epoch_partition(spark, tmp_path):
+def _p5img(seed):
+    import random
+    rng = random.Random(seed)
+    return b"P5\n16 16\n255\n" + bytes(rng.randrange(256) for _ in range(256))
+
+
+# tier -> (schema, two rows no tier may drop, tier kwargs)
+REPLAY_CASES = {
+    "dedup": ("doc_id long, text string",
+              [(0, "alpha beta"), (1, "gamma delta")],
+              dict(text_col="text", id_col="doc_id")),
+    "neardup": ("doc_id long, text string",
+                [(0, _NEAR_BASE), (1, _NEAR_OTHER)],
+                dict(text_col="text", id_col="doc_id")),
+    "phash": ("media_id long, content binary",
+              [(0, _p5img(1)), (1, _p5img(2))],
+              dict(content_col="content", id_col="media_id")),
+    "semantic": ("vec_id long, embedding array<double>",
+                 [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                 dict(vec_col="embedding", id_col="vec_id")),
+}
+
+
+@pytest.mark.parametrize("tier", list(REPLAY_CASES))
+def test_stream_ingest_replay_skips_own_epoch_partition(spark, tmp_path, tier):
     """Simulate a crash between the store write and the checkpoint commit:
     the store already holds THIS epoch's partition when the epoch replays.
     The replayed epoch must not see its own docs as duplicates (which would
-    drop them from corpus AND store via the dynamic overwrite)."""
-    from scalding_spark.functions.text import normalize_for_fingerprint
+    drop them from corpus AND store via the dynamic overwrite). The
+    pre-committed partition is the tier's own epoch-0 store write, made
+    under another checkpoint and moved into this checkpoint's namespace."""
+    schema, rows, kw = REPLAY_CASES[tier]
+    ingest = getattr(streaming, f"stream_ingest_{tier}")
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).write.parquet(src)
 
-    src, corpus, store, ckpt = (str(tmp_path / p) for p in
-                                ("src", "corpus", "store", "ckpt"))
-    batch = [(0, "alpha beta"), (1, "gamma delta")]
-    spark.createDataFrame(batch, DOC_SCHEMA).write.parquet(src)
+    def run(root):
+        q = ingest(streaming.stream_from_parquet_dir(spark, src, schema),
+                   corpus_path=str(root / "corpus"),
+                   store_path=str(root / "store"),
+                   checkpoint=str(root / "ckpt"), **kw)
+        q.awaitTermination(120)
+
+    def epoch0(root):
+        return hashlib.md5(str(root / "ckpt").encode()).hexdigest()[:12] + "-0"
+
+    pre, store = tmp_path / "pre", str(tmp_path / "store")
+    run(pre)
     # pre-commit the store partition the FIRST epoch (epoch_id=0) will own
-    run_tag = hashlib.md5(ckpt.encode()).hexdigest()[:12]
-    (spark.createDataFrame(batch, DOC_SCHEMA)
-     .select(F.md5(normalize_for_fingerprint(F.col("text"))).alias("fp"),
-             F.lit(f"{run_tag}-0").alias("__batch"))
-     .write.partitionBy("__batch").parquet(store))
-    stream = streaming.stream_from_parquet_dir(spark, src, DOC_SCHEMA)
-    q = streaming.stream_ingest_dedup(
-        stream, corpus_path=corpus, store_path=store, checkpoint=ckpt,
-        text_col="text", id_col="doc_id")
-    q.awaitTermination(120)
-    got = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
+    shutil.copytree(str(pre / "store" / f"__batch={epoch0(pre)}"),
+                    os.path.join(store, f"__batch={epoch0(tmp_path)}"))
+    assert spark.read.parquet(store).count() == len(rows)
+    run(tmp_path)
+    got = sorted(r[kw["id_col"]] for r in
+                 spark.read.parquet(str(tmp_path / "corpus")).collect())
     assert got == [0, 1], f"replayed epoch lost docs: corpus={got}"
     # the store partition was rewritten, not duplicated
     assert spark.read.parquet(store).where(
-        F.col("__batch") == f"{run_tag}-0").count() == 2
-
-
-def test_stream_ingest_neardup_replay_skips_own_epoch_partition(spark, tmp_path):
-    from scalding_spark.functions.dedup import exact_dedup, minhash_signatures
-
-    src, corpus, store, ckpt = (str(tmp_path / p) for p in
-                                ("srcN", "corpusN", "storeN", "ckptN"))
-    base = ("the quick brown fox jumps over the lazy dog while seven "
-            "wizards quietly brew hex elixirs beneath the old bridge")
-    batch = [(0, base), (1, "completely different text about spark plans "
-                            "catalyst tungsten and arrow batches flowing")]
-    spark.createDataFrame(batch, DOC_SCHEMA).write.parquet(src)
-    run_tag = hashlib.md5(ckpt.encode()).hexdigest()[:12]
-    bdf = exact_dedup(spark.createDataFrame(batch, DOC_SCHEMA),
-                      "text", "doc_id")
-    (minhash_signatures(bdf, "text", "doc_id", 64, 3)
-     .withColumn("__batch", F.lit(f"{run_tag}-0"))
-     .write.partitionBy("__batch").parquet(store))
-    stream = streaming.stream_from_parquet_dir(spark, src, DOC_SCHEMA)
-    q = streaming.stream_ingest_neardup(
-        stream, corpus_path=corpus, store_path=store, checkpoint=ckpt,
-        text_col="text", id_col="doc_id")
-    q.awaitTermination(120)
-    got = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
-    assert got == [0, 1], f"replayed epoch lost docs: corpus={got}"
+        F.col("__batch") == epoch0(tmp_path)).count() == len(rows)
 
 
 # --- 3. counters() timeout / scoping ----------------------------------------

@@ -141,6 +141,8 @@ def test_stream_ingest_semantic_survives_colliding_columns(spark, tmp_path):
     ("stream_ingest_semantic",
      "vec_id long, embedding array<double>, __batch string",
      [(1, [1.0], "t")]),
+    ("stream_ingest_phash", "media_id long, content binary, __batch string",
+     [(1, b"x", "t")]),
 ])
 def test_ingest_tiers_reject_reserved_batch_column(spark, tmp_path, tier,
                                                    schema, rows):
@@ -150,7 +152,7 @@ def test_ingest_tiers_reject_reserved_batch_column(spark, tmp_path, tier,
     stream = streaming.stream_from_parquet_dir(spark, src, schema)
     kw = dict(corpus_path=str(tmp_path / "c"), store_path=str(tmp_path / "s"),
               checkpoint=str(tmp_path / "k"))
-    if tier != "stream_ingest_semantic":
+    if tier in ("stream_ingest_dedup", "stream_ingest_neardup"):
         kw.update(text_col="text", id_col="doc_id")
     with pytest.raises(ValueError, match="__batch.*reserved"):
         getattr(streaming, tier)(stream, **kw)

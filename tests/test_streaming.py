@@ -194,20 +194,6 @@ def test_stream_ingest_dedup_cumulative(spark, tmp_path):
     assert spark.read.parquet(paths[2]).distinct().count() == 3
 
 
-def test_stream_ingest_dedup_without_bloom_same_result(spark, tmp_path):
-    pa = tuple(str(tmp_path / p) for p in ("srcA", "corA", "stoA", "ckA"))
-    src, corpus, store, ckpt = pa
-    spark.createDataFrame([(0, "aa bb"), (1, "cc dd"), (2, "aa bb")],
-                          DOC_SCHEMA).write.parquet(src)
-    stream = streaming.stream_from_parquet_dir(spark, src, DOC_SCHEMA)
-    q = streaming.stream_ingest_dedup(
-        stream, corpus_path=corpus, store_path=store, checkpoint=ckpt,
-        text_col="text", id_col="doc_id", use_bloom=False)
-    q.awaitTermination(120)
-    assert sorted(r.doc_id for r in
-                  spark.read.parquet(corpus).collect()) == [0, 1]
-
-
 # --- stream_ingest_neardup --------------------------------------------------
 
 BASE = ("the quick brown fox jumps over the lazy dog while seven wizards "
