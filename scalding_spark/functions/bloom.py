@@ -55,6 +55,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scalding_spark.session import _arrow_frame
+
 __all__ = ["BloomFilter", "bloom_params", "bloom_build", "bloom_filter_df",
            "bloom_semi_join", "bloom_anti_join", "bloom_join"]
 
@@ -174,8 +176,8 @@ def bloom_build(keys: DataFrame, key_col: str, n_items: int | None = None,
     dense = [0] * (m_bits // 64)
     for r in rows:
         dense[r["__w"]] = r["__b"]
-    words = keys.sparkSession.createDataFrame(
-        [(dense,)], f"{_WORDS} array<bigint>")
+    words = _arrow_frame(keys.sparkSession, [[dense]],
+                         f"{_WORDS} array<bigint>")
     return BloomFilter(df=words, m_bits=m_bits, k=k, n_items=n_items)
 
 

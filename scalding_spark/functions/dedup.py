@@ -17,10 +17,10 @@ shuffles on small fixed-width values (hashes / band ids), not text.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from scalding_spark.session import materialize
+from scalding_spark.session import _arrow_frame, materialize
 
 from scalding_spark.functions.text import (normalize_for_fingerprint,
                                            shingles, tokenize)
@@ -1022,6 +1022,45 @@ def contamination_report(corpus: DataFrame, benchmark: DataFrame,
                     .alias("n_shared_ngrams")))
 
 
+# Star rounds run only while the active edge set is larger than this; the
+# rest is labelled on the driver. 1e6 edges are about 16 MB as two int64
+# arrays (and the mapping is at most 2e6 rows), so the bound caps driver
+# memory whatever the input size.
+_LOCAL_FINISH_EDGES = 1_000_000
+
+# id types whose numpy order is Spark's order. Floating ids are not: Spark
+# sorts NaN above every value and equates -0.0 with 0.0.
+_LOCAL_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
+def _local_components(e: DataFrame) -> DataFrame:
+    """Label the edge set ``e(u, v)`` on the driver → (node, comp), comp =
+    the min node id of each component. ``e`` is pulled as Arrow and
+    labelled by min-root hooking with pointer jumping; each pass hooks
+    every root with a smaller-rooted neighbor onto the smallest one, so
+    the roots are the component minima and a root left unhooked is hooked
+    the pass after, O(log n) passes. The mapping ships back as Arrow."""
+    import numpy as np
+    t = e.select("u", "v").toArrow()
+    u, v = t.column("u").to_numpy(), t.column("v").to_numpy()
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[:len(u)], idx[len(u):]
+    parent = np.arange(len(nodes))
+    while len(a):
+        ra, rb = parent[a], parent[b]
+        live = ra != rb  # an edge inside one tree stays inside it
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    typ = e.schema["u"].dataType.simpleString()
+    return _arrow_frame(e.sparkSession, [nodes, nodes[parent]],
+                        f"node {typ}, comp {typ}")
+
+
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 30,
                          stats: dict | None = None) -> DataFrame:
@@ -1037,7 +1076,26 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     (linkage chains at exploratory thresholds, web graphs) in a handful
     more. Rounds scale with cluster DIAMETER, not corpus size — at 100 TB
     the iteration count is the same, each round just shuffles more edges.
-    Nothing but a per-round scalar fingerprint is collected to the driver.
+
+    Bounded local finish (the contract-then-finish-locally shape of Łącki
+    et al., "Connected Components at Scale via Local Contractions"): star
+    rounds run only while the active edge count is above
+    ``_LOCAL_FINISH_EDGES`` (T = 1e6, about 16 MB of int64 pairs). The
+    count before round 1 is the canonical cut's, observed during its
+    materialization; after round k it is the round's fingerprint count, so
+    the check adds no job. Once the count is ≤ T the residual edges are
+    collected as Arrow and labelled on the driver (numpy min-root
+    hooking), and the (node, comp) mapping — at most 2T rows — ships back
+    as an Arrow ``LocalRelation``. When the cut itself is ≤ T (typical
+    dedup pair lists) no round runs and the mapping IS the result: every
+    node is in the collected cut. Otherwise the mapping is broadcast-joined
+    onto the node set; nodes not in the residual label themselves (the
+    rounds keep every non-isolated node, so only self-loop-only nodes are
+    missing). At 100 TB the rounds contract the graph until its residual
+    fits under T: T, not the data, bounds what the driver holds. Only
+    integral ids finish locally, where numpy orders ids exactly as Spark
+    does; floating ids (NaN sorts above every value in Spark, -0.0 equals
+    0.0) always run the rounds to convergence.
 
     Each round over the parent-pointer edge set:
 
@@ -1055,7 +1113,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     output is lineage-cut with ``materialize(iterative=True)`` — without
     that the logical plan doubles every round.
 
-    ``stats['iterations']`` reports rounds used (matching ``kmeans``).
+    ``stats['iterations']`` reports the star rounds run (0 when the cut
+    is labelled on the driver).
     """
     # Cut the upstream ONCE, then derive all_nodes from the cut: a second
     # eager pass over the caller's un-checkpointed upstream recomputes it
@@ -1063,11 +1122,19 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     # ~17 s of the query's 44 s at sf1 in r12). Self-loops stay in the cut
     # so a node whose only edge is (n, n) still reaches all_nodes; the
     # rounds then drop them.
-    e = materialize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna()
-        .select(F.greatest("u", "v").alias("u"),
-                F.least("u", "v").alias("v")).distinct(),
-        eager=True, iterative=True)
+    cut = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+           .dropna().select(F.greatest("u", "v").alias("u"),
+                            F.least("u", "v").alias("v")).distinct())
+    local = cut.schema["u"].dataType.simpleString() in _LOCAL_ID_TYPES
+    if local:
+        # the cut's size rides its own materialization: no extra job
+        size = Observation()
+        cut = cut.observe(size, F.count(F.lit(1)).alias("n"))
+    e = materialize(cut, eager=True, iterative=True)
+    if local and size.get["n"] <= _LOCAL_FINISH_EDGES:
+        if stats is not None:
+            stats["iterations"] = 0
+        return _local_components(e)
     all_nodes = materialize(
         e.select(F.col("u").alias("node"))
          .union(e.select(F.col("v").alias("node")))
@@ -1075,6 +1142,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     e = e.where(F.col("u") != F.col("v"))
     prev_fp = None
     rounds = 0
+    labels = None
     wu = Window.partitionBy("u")
     for _ in range(max_iter):
         rounds += 1
@@ -1131,8 +1199,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if fp == prev_fp:
             break
         prev_fp = fp
+        if local and cnt <= _LOCAL_FINISH_EDGES:
+            labels = _local_components(e)
+            break
     if stats is not None:
         stats["iterations"] = rounds
+    if labels is not None:
+        return (all_nodes.join(F.broadcast(labels), "node", "left")
+                .select("node", F.coalesce("comp", "node").alias("comp")))
     # fixed point is a star forest: each non-root appears exactly once as u,
     # pointing at its component's min; roots and isolated nodes label
     # themselves. One final dedup clears the last round's residual nbr

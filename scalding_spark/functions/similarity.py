@@ -19,6 +19,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scalding_spark.session import _arrow_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -358,17 +359,6 @@ def _fresh_name(base: str, df: DataFrame, *more_taken: str) -> str:
     while f"{base}_{i}" in taken:
         i += 1
     return f"{base}_{i}"
-
-
-def _one_row_df(spark, row: tuple, schema: str) -> DataFrame:
-    """One-row DataFrame on a SINGLE partition. Plain ``createDataFrame``
-    parallelizes even a single row across ``defaultParallelism`` slices, so
-    a broadcast build over it schedules one task per core to ship one row —
-    measured ~0.2 s of the ~0.5 s per-iteration floor of the k-means loop
-    at sf0.1 on local[32]. A 1-slice parallelize makes the build one task;
-    the broadcast payload is identical."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([row], 1), schema)
 
 
 def _assign_cells_bcast(src: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -790,7 +780,7 @@ def semantic_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     spark = corpus.sparkSession
     bv = _fresh_name("__bvecs", corpus)
     vn = _fresh_name("__vecn", corpus, bv)
-    bdf = _one_row_df(spark, (bnorm,), f"{bv}: array<array<double>>")
+    bdf = _arrow_frame(spark, [[bnorm]], f"{bv}: array<array<double>>")
     v = F.col(vec_col)
     nrm = _norm(v)
     vecn = F.when(nrm > 0, F.transform(

@@ -205,6 +205,31 @@ def materialize(df, eager: bool = False, iterative: bool = False):
     return df.localCheckpoint(eager=eager)
 
 
+def _arrow_frame(spark: SparkSession, columns, schema):
+    """A driver-built DataFrame shipped to the JVM as Arrow: ``columns``
+    holds one sequence (list or numpy array) per field of ``schema`` (a
+    StructType or DDL string).
+
+    The one path for frames the engine builds from driver-side values
+    (CC labels, bloom words, broadcast centroids, dropped-id lists). A
+    ``pa.Table`` plans a JVM ``LocalRelation``: scanning or broadcasting it
+    starts no Python worker. A list through ``createDataFrame`` plans a
+    ``LogicalRDD`` over a Python RDD instead, scanned by one Python-worker
+    task per core (about 0.5 s wall for a 1-row frame on 4 cores). Needs no
+    arrow conf: the table goes to the JVM whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Read the driver's parquet tables; returns dict name -> DataFrame.
 

@@ -105,6 +105,7 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
     from scalding_spark.functions.similarity import (_drop_null_vecs,
                                                      lsh_bucket,
                                                      random_hyperplanes)
+    from scalding_spark.session import _arrow_frame
     from scalding_spark.streaming import _epoch_ingest
     thr = float(threshold)
     if store_buckets is not None and not 1 <= store_buckets <= 16:
@@ -168,10 +169,8 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
             dropped = _within_batch_hits(barr, thr)
             if dropped:
                 from pyspark.sql.types import StructField, StructType
-                ddf = batch.sparkSession.createDataFrame(
-                    [(i,) for i in dropped],
-                    StructType([StructField(
-                        id_col, valid.schema[id_col].dataType)]))
+                ddf = _arrow_frame(batch.sparkSession, [dropped], StructType(
+                    [StructField(id_col, valid.schema[id_col].dataType)]))
                 batch = batch.join(F.broadcast(ddf), id_col, "left_anti")
             # vs the store: map-only scan emitting matched batch ids only
             store = read_store()

@@ -276,10 +276,12 @@ def test_ngram_doc_and_set_space_outputs_identical(spark):
 
 # --- large-star/small-star CC -----------------------------------------------
 
-def test_star_cc_path_graph_converges_logarithmically(spark):
+def test_star_cc_path_graph_converges_logarithmically(spark, monkeypatch):
     """A 200-edge path (diameter 200) converges in O(log d) rounds, not
-    O(d) — the point of star contraction over label propagation. The
-    other exact round pins are in test_cc_unionfind_parity."""
+    O(d) — the point of star contraction over label propagation. T = 0
+    keeps the driver finish out. The other exact round pins are in
+    test_cc_unionfind_parity."""
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "src long, dst long")
     stats = {}
@@ -314,6 +316,25 @@ def test_dedup_clusters_star_algorithm(spark):
     out = dedup.dedup_clusters(docs, pairs, "doc_id")
     got = {(r.doc_id, r.cluster_id) for r in out.collect()}
     assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)}
+
+
+def test_dedup_clusters_job_count_pinned(spark):
+    """Exact Spark jobs of building and collecting dedup_clusters on the
+    6-doc / 3-pair fixture, read from the status tracker under a job
+    group. A reintroduced per-round action or Python-worker scan changes
+    this number."""
+    docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)],
+                                  "id_a long, id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-clusters-jobs", "job-count pin")
+    try:
+        rows = dedup.dedup_clusters(docs, pairs, "doc_id").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 6
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup-clusters-jobs")
+    assert len(jobs) == 5, sorted(jobs)
 
 
 # --- round-2 training-pipeline ops: decontaminate / cap / shard-pack -------

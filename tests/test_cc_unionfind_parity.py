@@ -33,15 +33,73 @@ def _expected(edges):
     return golden_components(nodes, edges)
 
 
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [
+@pytest.fixture
+def star_only(monkeypatch):
+    """T = 0: every graph runs the star rounds to convergence (the driver
+    finish then only ever sees an empty residual)."""
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+
+
+_RANDOM_GRAPHS = [
     # sparse (forest-ish, many components), near-critical, dense (one
     # giant component) — the three Erdős–Rényi regimes — plus a sparse
     # and a dense graph on other seeds
     (7, 200, 60), (8, 200, 190), (9, 120, 400), (11, 200, 120), (12, 90, 300),
-])
-def test_cc_star_matches_unionfind_random_graphs(spark, seed, n_nodes, n_edges):
+]
+
+
+@pytest.mark.parametrize("seed,n_nodes,n_edges", _RANDOM_GRAPHS)
+def test_cc_star_matches_unionfind_random_graphs(spark, star_only, seed,
+                                                 n_nodes, n_edges):
     edges = _random_edges(random.Random(seed), n_nodes, n_edges)
     assert _spark_labels(spark, edges) == _expected(edges)
+
+
+@pytest.mark.parametrize("seed,n_nodes,n_edges", _RANDOM_GRAPHS)
+def test_cc_local_finish_matches_unionfind(spark, seed, n_nodes, n_edges):
+    """Default T: every cut here is under T, so no star round runs and the
+    driver labels the whole cut."""
+    edges = _random_edges(random.Random(seed), n_nodes, n_edges)
+    stats = {}
+    assert _spark_labels(spark, edges, stats) == _expected(edges)
+    assert stats["iterations"] == 0
+
+
+@pytest.mark.parametrize("finish_edges", [0, 10 ** 6], ids=["star", "local"])
+@pytest.mark.parametrize("edges,want", [
+    ([(1, 2), (12, 12)], {1: 1, 2: 1, 12: 12}),
+    ([(1, 2), (None, 3), (4, None), (2, 5)], {1: 1, 2: 1, 5: 1}),
+    ([], {}),
+], ids=["self_loop_only_node", "null_endpoints", "empty"])
+def test_cc_edge_cases_on_both_paths(spark, monkeypatch, finish_edges,
+                                     edges, want):
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", finish_edges)
+    assert _spark_labels(spark, edges) == want
+
+
+def test_cc_mixed_finish_runs_fewer_rounds(spark, monkeypatch):
+    """T between the cut (2000 clique edges) and round 1's output (a
+    4-edge star per clique): one star round, then the driver finishes —
+    one round fewer than the pure-star pin below."""
+    edges = [(5 * c + i, 5 * c + j) for c in range(200)
+             for i in range(5) for j in range(i + 1, 5)]
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 1000)
+    stats = {}
+    assert _spark_labels(spark, edges, stats) == _expected(edges)
+    assert stats["iterations"] == 1
+
+
+def test_cc_floating_ids_keep_the_rounds(spark):
+    """numpy cannot order floating ids as Spark does (Spark sorts NaN above
+    every value and equates -0.0 with 0.0), so a double-typed graph runs
+    the star rounds even though its cut is far under the default T."""
+    df = spark.createDataFrame([(1.5, 2.5), (2.5, 0.5), (3.0, 4.0)],
+                               "src double, dst double")
+    stats = {}
+    got = {r.node: r.comp for r in
+           dedup.connected_components(df, stats=stats).collect()}
+    assert got == {0.5: 0.5, 1.5: 0.5, 2.5: 0.5, 3.0: 3.0, 4.0: 3.0}
+    assert stats["iterations"] > 0
 
 
 @pytest.mark.parametrize("edges,rounds", [
@@ -50,7 +108,7 @@ def test_cc_star_matches_unionfind_random_graphs(spark, seed, n_nodes, n_edges):
       for i in range(5) for j in range(i + 1, 5)], 2),
     (_random_edges(random.Random(8), 200, 190), 5),
 ], ids=["cliques", "random"])
-def test_cc_round_counts_pinned(spark, edges, rounds):
+def test_cc_round_counts_pinned(spark, star_only, edges, rounds):
     """Exact rounds (the 200-edge path's 9 is pinned in test_cc_sampling).
     The convergence fingerprint stops at the first round whose output
     repeats its input's distinct edge set; one more round here means

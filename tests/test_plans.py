@@ -28,6 +28,10 @@ def plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_filter_and_projection_pushed_to_scan(li):
     q = li.where(F.col("l_quantity") > 45).select("l_orderkey", "l_quantity")
     p = plan(q)
@@ -316,15 +320,32 @@ def test_kmeans_bcast_assignment_matches_literal(spark):
 
 
 def test_kmeans_centroid_build_side_is_one_partition(spark):
-    """The per-iteration broadcast build must be a single task: plain
-    createDataFrame spreads even one row over defaultParallelism slices,
-    turning every Lloyd round's broadcast build into a task-per-core job
-    (measured ~0.2 s/iteration of pure scheduling at sf0.1 on local[32])."""
-    from scalding_spark.functions import similarity
-    one = similarity._one_row_df(spark, ([[0.0, 1.0]],),
-                                 "cents: array<array<double>>")
+    """A driver-built one-row frame (semantic_decontaminate's broadcast
+    benchmark vectors) must be a single task: plain createDataFrame spreads
+    even one row over defaultParallelism Python-worker slices. The Arrow
+    path plans a JVM LocalRelation, one partition per row at most."""
+    from scalding_spark.session import _arrow_frame
+    one = _arrow_frame(spark, [[[[0.0, 1.0]]]], "cents: array<array<double>>")
+    assert _optimized(one).startswith("LocalRelation"), _optimized(one)
     assert one.rdd.getNumPartitions() == 1
-    assert one.count() == 1
+    assert [r.cents for r in one.collect()] == [[[0.0, 1.0]]]
+
+
+def test_driver_built_frames_plan_local_relation(spark):
+    """The bloom words row and the CC label mapping are built on the
+    driver and ship as Arrow: a LocalRelation scans in the JVM, where a
+    list-built frame is a LogicalRDD scanned by one Python-worker task
+    per core."""
+    from scalding_spark.functions import bloom
+    keys = spark.range(50).select(F.col("id").alias("k"))
+    assert _optimized(bloom.bloom_build(keys, "k").df) \
+        .startswith("LocalRelation")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "src long, dst long")
+    cc = dedup.connected_components(edges)
+    assert _optimized(cc).startswith("LocalRelation"), _optimized(cc)
+    assert sorted(map(tuple, cc.collect())) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
 
 
 def test_weighted_sample_is_map_only(spark):
@@ -566,7 +587,7 @@ def test_star_cc_riding_dedup_single_exchange_per_star(spark):
     assert len(ex) == 1, p
     src = inspect.getsource(dedup.connected_components)
     loop = src[src.index("for _ in range(max_iter)"):
-               src.index("if stats is not None")]
+               src.index('stats["iterations"] = rounds')]
     assert ".distinct()" not in loop, "round-end distinct exchange is back"
     assert 'dropDuplicates(["u", "v"])' in loop
     # upstream cut ONCE (r12): the canonical edge set is materialized
