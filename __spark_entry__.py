@@ -1800,6 +1800,23 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.round(F.avg("f0"), 6).alias("avg_f0")))
 
 
+def _fabricated_media(docs: DataFrame,
+                     header: bytes = b"P5\n16 16\n255\n") -> DataFrame:
+    """(media_id, content) per document: ``header`` + 256 body bytes
+    md5-derived from the doc's FAMILY (doc_id % 100), byte 0 replaced by
+    (doc_id % 4)·64 — family members sit at perceptual-hash hamming ≤ 1,
+    cross-family media are effectively random. The default header makes
+    a 16×16 P5 image (q_image_neardup, scripts/streaming_bench.py's
+    phash tier); q_audio_neardup passes a WAV header."""
+    fam = (F.col("doc_id") % 100).cast("string")
+    body = F.concat(*[F.unhex(F.md5(F.concat(fam, F.lit(f"-{j}"))))
+                      for j in range(16)])
+    delta = F.unhex(F.lpad(F.hex((F.col("doc_id") % 4) * 64), 2, "0"))
+    content = F.concat(F.lit(header), delta, F.substring(body, 2, 255))
+    return docs.select(F.col("doc_id").alias("media_id"),
+                       content.alias("content"))
+
+
 def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup tier (multimodal.image_neardup_pairs, r10): dHash
     perceptual fingerprints over REAL decoded pixels (16×16 binary P5
@@ -1810,15 +1827,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer-luminance grid, and the banding — all-integer, so the
     mirror is exact by construction)."""
     from scalding_spark.functions import multimodal as mm
-    docs = _t(spark, sf_dir, "documents")
-    fam = (F.col("doc_id") % 100).cast("string")
-    body = F.concat(*[F.unhex(F.md5(F.concat(fam, F.lit(f"-{j}"))))
-                      for j in range(16)])
-    delta = F.unhex(F.lpad(F.hex((F.col("doc_id") % 4) * 64), 2, "0"))
-    content = F.concat(F.lit(b"P5\n16 16\n255\n"),
-                       delta, F.substring(body, 2, 255))
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        content.alias("content"))
+    media = _fabricated_media(_t(spark, sf_dir, "documents"))
     return mm.image_neardup_pairs(media, id_col="media_id",
                                   content_col="content", max_hamming=2)
 
@@ -1834,17 +1843,10 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     — all-integer, so the mirror is exact by construction)."""
     import struct
     from scalding_spark.functions import multimodal as mm
-    docs = _t(spark, sf_dir, "documents")
-    fam = (F.col("doc_id") % 100).cast("string")
-    body = F.concat(*[F.unhex(F.md5(F.concat(fam, F.lit(f"-{j}"))))
-                      for j in range(16)])
-    delta = F.unhex(F.lpad(F.hex((F.col("doc_id") % 4) * 64), 2, "0"))
     hdr = (b"RIFF" + struct.pack("<I", 36 + 256) + b"WAVEfmt "
            + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
            + b"data" + struct.pack("<I", 256))
-    content = F.concat(F.lit(hdr), delta, F.substring(body, 2, 255))
-    media = docs.select(F.col("doc_id").alias("media_id"),
-                        content.alias("content"))
+    media = _fabricated_media(_t(spark, sf_dir, "documents"), hdr)
     return mm.audio_neardup_pairs(media, id_col="media_id",
                                   content_col="content", max_hamming=2)
 

@@ -223,6 +223,10 @@ def main(argv: list[str] | None = None) -> None:
     spark.range(1_000_000).agg(F.sum("id")).write.mode("overwrite").format("noop").save()
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1000) \
         .write.mode("overwrite").format("noop").save()
+    # one host-speed reading (perfbench's probe) to tell host drift from
+    # plan change when comparing records from different windows
+    from perfbench.run import calibrate
+    calibration = calibrate(spark)
 
     timings: dict[str, float] = {}
     first_runs: dict[str, float] = {}
@@ -249,6 +253,7 @@ def main(argv: list[str] | None = None) -> None:
         # frames persisted inside run 1, so the first-run total quantifies
         # that warm-cache flattery without changing the comparable metric.
         "first_run_total": round(sum(first_runs.values()), 3),
+        "calibration_sec": round(calibration, 3),
     }
     line = json.dumps(record)
     # Mirror the record to a file so a clipped/noisy stdout capture can

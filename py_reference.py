@@ -175,6 +175,27 @@ def shingles(text: str, n: int = 3) -> list[str]:
     return out
 
 
+def minhash_signature(shs: list[str], num_hashes: int) -> list[int]:
+    """Mirror of dedup.minhash_signatures for one non-empty shingle list:
+    slot s is the min over shingles of xxhash64(xxhash64(shingle), s)."""
+    h0 = [xxhash64(s) for s in shs]
+    return [min(xxhash64(h, ("i32", s)) for h in h0)
+            for s in range(num_hashes)]
+
+
+def minhash_band_keys(sig: list[int], bands: int) -> list[tuple[int, int]]:
+    """Mirror of dedup.minhash_band_hashes: one (band, hash) bucket key
+    per band; the trailing len(sig) % bands slots are unused."""
+    r = len(sig) // bands
+    return [(b, xxhash64(sig[b * r:(b + 1) * r], ("i32", b)))
+            for b in range(bands)]
+
+
+def signature_estimate(sig_a: list[int], sig_b: list[int]) -> float:
+    """Mirror of dedup.signature_jaccard: the agreeing-slot fraction."""
+    return sum(a == b for a, b in zip(sig_a, sig_b)) / len(sig_a)
+
+
 def dot(a, b) -> float:
     """Left-to-right double accumulation — same order as similarity._dot's
     F.aggregate, so results are bit-identical to Spark's."""
@@ -257,19 +278,13 @@ def golden_minhash_lsh_pairs_scalar(sf_dir: str):
     """Mirror of q_minhash_lsh_pairs: num_hashes=32, bands=16, shingle_n=3,
     threshold=0.3."""
     num_hashes, bands, threshold = 32, 16, 0.3
-    r = num_hashes // bands
     docs = [(i, shingles(t)) for i, t in _documents(sf_dir)]
     docs = [(i, s) for i, s in docs if s]
-    sigs = {}
-    for i, shs in docs:
-        h0 = [xxhash64(s) for s in shs]
-        sigs[i] = [min(xxhash64(h, ("i32", s)) for h in h0)
-                   for s in range(num_hashes)]
+    sigs = {i: minhash_signature(shs, num_hashes) for i, shs in docs}
     buckets = {}
     for i, sig in sigs.items():
-        for b in range(bands):
-            key = (xxhash64(sig[b * r:(b + 1) * r], ("i32", b)),)
-            buckets.setdefault(key, []).append(i)
+        for _b, h in minhash_band_keys(sig, bands):
+            buckets.setdefault(h, []).append(i)
     cands = set()
     for ids in buckets.values():
         ids = sorted(ids)
@@ -294,33 +309,23 @@ def golden_neardup_against_scalar(sf_dir: str):
     ANY (band, hash)-bucketed store candidate reaches 0.5. Token-less
     batch docs carry no signature and pass."""
     num_hashes, bands, threshold = 32, 16, 0.5
-    r = num_hashes // bands
     all_docs = _documents(sf_dir)
     docs = [(i, shingles(t)) for i, t in all_docs]
-    docs = [(i, s) for i, s in docs if s]
-    sigs = {}
-    for i, shs in docs:
-        h0 = [xxhash64(s) for s in shs]
-        sigs[i] = [min(xxhash64(h, ("i32", s)) for h in h0)
-                   for s in range(num_hashes)]
+    sigs = {i: minhash_signature(s, num_hashes) for i, s in docs if s}
     buckets = {}
     for i, sig in sigs.items():
         if i % 2 == 0:
-            for b in range(bands):
-                key = (b, xxhash64(sig[b * r:(b + 1) * r], ("i32", b)))
+            for key in minhash_band_keys(sig, bands):
                 buckets.setdefault(key, []).append(i)
     dropped = set()
     for i, sig in sigs.items():
         if i % 2 == 1:
             cands = set()
-            for b in range(bands):
-                key = (b, xxhash64(sig[b * r:(b + 1) * r], ("i32", b)))
+            for key in minhash_band_keys(sig, bands):
                 cands.update(buckets.get(key, ()))
-            for sid in cands:
-                agree = sum(a == c for a, c in zip(sig, sigs[sid]))
-                if agree / num_hashes >= threshold:
-                    dropped.add(i)
-                    break
+            if any(signature_estimate(sig, sigs[sid]) >= threshold
+                   for sid in cands):
+                dropped.add(i)
     kept = sorted(i for i, _t in all_docs if i % 2 == 1 and i not in dropped)
     return [(i,) for i in kept], ["doc_id"]
 

@@ -607,8 +607,8 @@ def minhash_band_hashes(num_hashes: int, bands: int,
     """Band-hash array over a MinHash signature column: element b is
     xxhash64 of the b-th signature slice, salted by the band index (two
     docs are LSH candidates iff any element matches). Shared by the batch
-    self-join (:func:`minhash_lsh_pairs`) and the streaming
-    batch-vs-store probe so both bucket identically. When ``bands`` does
+    self-join (:func:`minhash_lsh_pairs`) and :func:`_signature_probe`
+    so both bucket identically. When ``bands`` does
     not divide ``num_hashes`` the trailing ``num_hashes % bands``
     signature slots are unused (rows_per_band = num_hashes // bands) —
     the historical minhash_lsh_pairs contract."""
@@ -635,7 +635,6 @@ def signature_jaccard(sig_a: Column, sig_b: Column,
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_hashes: int = 64, bands: int = 16,
                       shingle_n: int = 3, threshold: float = 0.7,
-                      persist_signatures: bool = True,
                       stats: dict | None = None) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verification.
 
@@ -660,10 +659,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     skew-split can divide a hot set's expansion across tasks. Set
     identity keys on md5 of the sorted shingle array (tokens are
     alphanumeric, shingles space-joined, so the newline join is
-    unambiguous); ``persist_signatures`` persists the per-set frame
-    (MEMORY_AND_DISK — it carries the representative shingle arrays for
-    the verify, the ngram index-persist tradeoff) plus the tiny
-    (id, set-key) membership map used four times downstream.
+    unambiguous). The per-set frame is persisted (MEMORY_AND_DISK — it
+    carries the representative shingle arrays for the verify, the ngram
+    index-persist tradeoff), and so is the tiny (id, set-key) membership
+    map used four times downstream.
 
     ``stats``: pass a dict to record candidate observability counters
     (costs extra count jobs; the hamming_band_pairs precedent):
@@ -686,14 +685,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     gsigs = groups.select(
         "__g", "__shs",
         _minhash_sig_expr(F.col("__shs"), num_hashes).alias("sig"))
-    if persist_signatures:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from scalding_spark.session import register_persisted
-        members = members.persist()
-        register_persisted(members)  # released via release_materialized()
-        gsigs = gsigs.persist(StorageLevel.MEMORY_AND_DISK)
-        register_persisted(gsigs)
+    from scalding_spark.session import register_persisted
+    members = members.persist()
+    register_persisted(members)  # released via release_materialized()
+    gsigs = gsigs.persist(StorageLevel.MEMORY_AND_DISK)
+    register_persisted(gsigs)
     band_arr = minhash_band_hashes(num_hashes, bands)
     buckets = gsigs.select("__g", F.explode(band_arr).alias("bucket"))
     l, r = buckets.alias("l"), buckets.alias("r")
@@ -736,11 +734,41 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     return same.unionByName(cross)
 
 
+def _signature_probe(probe: DataFrame, target: DataFrame, num_hashes: int,
+                     bands: int, threshold: float) -> DataFrame:
+    """The one MinHash store probe → ``(bid, sid)``: ``probe`` id ``bid``
+    and ``target`` id ``sid`` share ≥1 (band, hash) bucket and their
+    :func:`signature_jaccard` estimate reaches ``threshold``; both frames
+    are ``(id, sig)``. The probe's bands and signatures BROADCAST over a
+    map-only scan of the target, so the corpus-sized target never
+    shuffles. A self-probe also emits (a, a) and both orders — filter
+    ``sid < bid`` for "the larger id loses". :func:`neardup_against` and
+    both steps of the streaming near-dup tier call it, so batch and
+    stream agree by construction."""
+    bh = minhash_band_hashes(num_hashes, bands)
+    bbands = probe.select(F.col("id").alias("__bid"),
+                          F.posexplode(bh).alias("__band", "__h"))
+    bsigs = probe.select(F.col("id").alias("__bid"),
+                         F.col("sig").alias("__bsig"))
+    store = target.select(F.col("id").alias("__sid"),
+                          F.col("sig").alias("__ssig"))
+    store_bands = store.select(
+        "__sid",
+        F.posexplode(minhash_band_hashes(num_hashes, bands, "__ssig"))
+        .alias("__band", "__h"))
+    cands = (store_bands.join(F.broadcast(bbands), ["__band", "__h"])
+             .select("__bid", "__sid").distinct())
+    return (store.join(F.broadcast(cands), "__sid")
+            .join(F.broadcast(bsigs), "__bid")
+            .where(signature_jaccard(F.col("__bsig"), F.col("__ssig"),
+                                     num_hashes)
+                   >= F.lit(float(threshold)))
+            .select(F.col("__bid").alias("bid"), F.col("__sid").alias("sid")))
+
+
 def neardup_against(new: DataFrame, store_sigs: DataFrame, text_col: str,
                     id_col: str, num_hashes: int = 64, bands: int = 16,
-                    shingle_n: int = 3, threshold: float = 0.7,
-                    sig_id_col: str = "id",
-                    sig_col: str = "sig") -> DataFrame:
+                    shingle_n: int = 3, threshold: float = 0.7) -> DataFrame:
     """Batch analog of the streaming store probe
     (:func:`scalding_spark.streaming.stream_ingest_neardup` step 3) —
     and the NEAR-dup upgrade of :func:`dedup_against_fingerprints`: drop
@@ -753,32 +781,13 @@ def neardup_against(new: DataFrame, store_sigs: DataFrame, text_col: str,
     batch and streaming paths without re-signing.
 
     100 TB shape: ONE signature pass over the batch (the dominant
-    per-doc CPU); the batch band table BROADCASTS over a map-only scan
-    of the store — the corpus-sized store never shuffles, increment cost
-    is O(|batch| + one store scan); the estimator verify touches only
-    candidate signatures (stderr ≈ 1/sqrt(num_hashes)). Token-less/NULL
-    docs carry no shingles and always pass — no evidence is not
-    duplication evidence."""
-    bh = minhash_band_hashes(num_hashes, bands)
+    per-doc CPU), then :func:`_signature_probe` — the store is scanned
+    map-only and never shuffles, increment cost is O(|batch| + one store
+    scan). Token-less/NULL docs carry no shingles and always pass — no
+    evidence is not duplication evidence."""
     sigs = minhash_signatures(new, text_col, id_col, num_hashes, shingle_n)
-    bbands = sigs.select(F.col("id").alias("__bid"),
-                         F.posexplode(bh).alias("__band", "__h"))
-    bsigs = sigs.select(F.col("id").alias("__bid"),
-                        F.col("sig").alias("__bsig"))
-    store = store_sigs.select(F.col(sig_id_col).alias("__sid"),
-                              F.col(sig_col).alias("__ssig"))
-    store_bands = store.select(
-        "__sid",
-        F.posexplode(minhash_band_hashes(num_hashes, bands, "__ssig"))
-        .alias("__band", "__h"))
-    cands = (store_bands.join(F.broadcast(bbands), ["__band", "__h"])
-             .select("__bid", "__sid").distinct())
-    dups = (store.join(F.broadcast(cands), "__sid")
-            .join(F.broadcast(bsigs), "__bid")
-            .where(signature_jaccard(F.col("__bsig"), F.col("__ssig"),
-                                     num_hashes)
-                   >= F.lit(float(threshold)))
-            .select(F.col("__bid").alias(id_col)).distinct())
+    dups = (_signature_probe(sigs, store_sigs, num_hashes, bands, threshold)
+            .select(F.col("bid").alias(id_col)).distinct())
     return new.join(dups, id_col, "left_anti")
 
 
@@ -823,8 +832,8 @@ def hamming_chunk_cols(hash_col, max_hamming: int) -> Column:
     """The pigeonhole band key array for a 64-bit hash: (max_hamming+1)
     ``struct(chunk, key)`` entries — a pair within the hamming budget
     must agree exactly on ≥1 entry (see :func:`hamming_band_pairs`).
-    Shared by the batch pair generator and the streaming image tier's
-    store probe (same chunking ⇒ same recall guarantee).
+    Shared by the batch pair generator and :func:`_hamming_probe`
+    (same chunking ⇒ same recall guarantee).
 
     ``max_hamming=0`` is exact-hash banding: ONE chunk holding the whole
     hash (no shift/mask — a 64-bit mask literal doesn't fit a BIGINT).
@@ -848,11 +857,34 @@ def hamming_chunk_cols(hash_col, max_hamming: int) -> Column:
         for c in range(chunks)])
 
 
+def _hamming_probe(probe: DataFrame, target: DataFrame,
+                   max_hamming: int) -> DataFrame:
+    """The one 64-bit hash store probe → ``(bid, sid)``: ``target`` id
+    ``sid`` sits within ``max_hamming`` bits of ``probe`` id ``bid``
+    (one row per shared chunk, so a pair may repeat); both frames are
+    ``(id, phash)``. The probe's :func:`hamming_chunk_cols` table
+    BROADCASTS over a map-only scan of the target with the hamming
+    verify fused into the join — one target scan, no shuffle, and
+    pigeonhole-exact. A self-probe also emits (a, a) and both orders —
+    filter ``sid < bid`` for "the larger id loses". Both steps of the
+    streaming perceptual-hash tier call it."""
+    bchunks = probe.select(
+        F.col("id").alias("bid"), F.col("phash").alias("bph"),
+        F.explode(hamming_chunk_cols("phash", max_hamming)).alias("ck"))
+    return (target.select(
+                F.col("id").alias("sid"), "phash",
+                F.explode(hamming_chunk_cols("phash", max_hamming))
+                .alias("ck"))
+            .join(F.broadcast(bchunks), "ck")
+            .where(F.bit_count(F.col("phash").bitwiseXOR(F.col("bph")))
+                   <= max_hamming)
+            .select("bid", "sid"))
+
+
 def hamming_band_pairs(hashes: DataFrame, id_col: str, hash_col: str,
                        max_hamming: int,
                        max_chunk_freq: int | None = None,
-                       stats: dict | None = None,
-                       persist_hashes: bool = True) -> DataFrame:
+                       stats: dict | None = None) -> DataFrame:
     """Pairs of 64-bit hashes within hamming distance ≤ max_hamming →
     (id_a, id_b, hamming), banded: split the hash into (max_hamming+1)
     chunks — any pair within the distance budget must agree exactly on
@@ -887,13 +919,13 @@ def hamming_band_pairs(hashes: DataFrame, id_col: str, hash_col: str,
     bucket), and ``cross_hash_candidates`` (Σ C(d,2) over chunk buckets —
     the band join's true row count before the hamming filter).
 
-    ``persist_hashes`` (default True): the (id, hash) frame feeds FIVE
-    scans downstream (the distinct-hash banding, both sides of the
-    same-hash self-join, both membership joins) — for image/audio
-    callers the upstream is an expensive Arrow decode+hash pass, so
-    without a persist that pass would re-execute per scan. The rows are
-    16 bytes each, the 100 TB-safe persist class (the minhash
-    persist_signatures rationale); released via release_materialized().
+    The (id, hash) frame is persisted: it feeds FIVE scans downstream
+    (the distinct-hash banding, both sides of the same-hash self-join,
+    both membership joins) — for image/audio callers the upstream is an
+    expensive Arrow decode+hash pass, so without a persist that pass
+    would re-execute per scan. The rows are 16 bytes each, the 100
+    TB-safe persist class (as minhash_lsh_pairs' per-set frame);
+    released via release_materialized().
     Exact duplicate (id, hash) rows are dropped up front and the
     membership expansion never emits a self-pair, so an id appearing
     twice (duplicate rows, or two hashes for one id) cannot produce
@@ -902,10 +934,9 @@ def hamming_band_pairs(hashes: DataFrame, id_col: str, hash_col: str,
     sims = (hashes.select(F.col(id_col).alias("id"),
                           F.col(hash_col).alias("simhash"))
             .distinct())
-    if persist_hashes:
-        from scalding_spark.session import register_persisted
-        sims = sims.persist()
-        register_persisted(sims)  # released via release_materialized()
+    from scalding_spark.session import register_persisted
+    sims = sims.persist()
+    register_persisted(sims)  # released via release_materialized()
     dh = sims.select("simhash").distinct()
     exploded = dh.select(
         "simhash",
@@ -1122,9 +1153,11 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     # ~17 s of the query's 44 s at sf1 in r12). Self-loops stay in the cut
     # so a node whose only edge is (n, n) still reaches all_nodes; the
     # rounds then drop them.
+    # NULL endpoints only: dropna() would also drop floating NaN ids
     cut = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-           .dropna().select(F.greatest("u", "v").alias("u"),
-                            F.least("u", "v").alias("v")).distinct())
+           .where(F.col("u").isNotNull() & F.col("v").isNotNull())
+           .select(F.greatest("u", "v").alias("u"),
+                   F.least("u", "v").alias("v")).distinct())
     local = cut.schema["u"].dataType.simpleString() in _LOCAL_ID_TYPES
     if local:
         # the cut's size rides its own materialization: no extra job

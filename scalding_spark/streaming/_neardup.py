@@ -22,14 +22,13 @@ def stream_ingest_neardup(stream_df: DataFrame, corpus_path: str,
     1. within-batch exact dedup, then ONE MinHash signature computation
        for the whole batch (the dominant per-doc CPU cost — shared by
        every later step);
-    2. within-batch near-dup: band self-join over those signatures,
-       verified by :func:`dedup.signature_jaccard` (smaller ``id_col``
-       survives) — the same estimator contract as the store check, so
-       batch boundaries don't change which pairs count as duplicates;
-    3. vs the store: band-hash probe — the batch's band table BROADCASTS
-       against a map-only scan of the (id, sig) store, so the store is
-       never shuffled — candidates verified by the same estimator
-       (stderr ≈ 1/√num_hashes);
+    2. within-batch near-dup: :func:`dedup._signature_probe` of the
+       batch against itself — a doc loses when any smaller-``id_col``
+       doc qualifies — the same kernel as step 3, so batch boundaries
+       don't change which pairs count as duplicates;
+    3. vs the store: :func:`dedup._signature_probe` of the batch
+       against the (id, sig) store — the batch analog is
+       :func:`dedup.neardup_against`, so both verify identically;
     4. novel docs land in ``corpus_path``, their signatures in
        ``store_path``; crash/replay semantics: see
        :func:`scalding_spark.streaming._epoch_ingest`.
@@ -46,58 +45,35 @@ def stream_ingest_neardup(stream_df: DataFrame, corpus_path: str,
     micro-batch, write it partitioned by a band-hash bucket so the probe
     prunes partitions; the verify scan prunes by the candidate semi-join.
     """
-    from scalding_spark.functions.dedup import (exact_dedup,
+    from scalding_spark.functions.dedup import (_signature_probe,
+                                                exact_dedup,
                                                 minhash_band_hashes,
-                                                minhash_signatures,
-                                                signature_jaccard)
+                                                minhash_signatures)
     from scalding_spark.streaming import _epoch_ingest
-    bh = minhash_band_hashes(num_hashes, bands)
-    thr = F.lit(float(threshold))
+    # bands > num_hashes raises here, at BUILDER time, not per epoch
+    minhash_band_hashes(num_hashes, bands)
 
     def vet(batch: DataFrame, read_store):
         batch = exact_dedup(batch, text_col, id_col)
-        # ONE signature pass per batch; localCheckpoint: sigs feed the
-        # self-join (twice), the store probe, and the store write — and
-        # release with the batch, unlike persist() which would accumulate
-        # a cache entry per micro-batch for the stream's lifetime
+        # ONE signature pass per batch; localCheckpoint: sigs feed both
+        # probes and the store write — and release with the batch,
+        # unlike persist() which would accumulate a cache entry per
+        # micro-batch for the stream's lifetime
         sigs = (minhash_signatures(batch, text_col, id_col, num_hashes,
                                    shingle_n)
                 .localCheckpoint())
-        bbands = sigs.select(F.col("id").alias("bid"),
-                             F.posexplode(bh).alias("band", "h"))
-        bsigs = sigs.select(F.col("id").alias("bid"),
-                            F.col("sig").alias("bsig"))
-        # within-batch: band self-join, estimator verify, larger id loses
-        l, r = bbands.alias("l"), bbands.alias("r")
-        losers = (l.join(r, (F.col("l.band") == F.col("r.band"))
-                         & (F.col("l.h") == F.col("r.h"))
-                         & (F.col("l.bid") < F.col("r.bid")))
-                  .select(F.col("l.bid").alias("wid"),
-                          F.col("r.bid").alias("bid")).distinct()
-                  .join(bsigs.select(F.col("bid").alias("wid"),
-                                     F.col("bsig").alias("wsig")), "wid")
-                  .join(bsigs, "bid")
-                  .where(signature_jaccard(F.col("wsig"), F.col("bsig"),
-                                           num_hashes) >= thr)
-                  .select("bid").distinct())
-        batch = batch.join(losers.withColumnRenamed("bid", id_col),
-                           id_col, "left_anti")
-        sigs = sigs.join(losers.withColumnRenamed("bid", "id"),
-                         "id", "left_anti")
-        bbands = bbands.join(losers, "bid", "left_anti")
-        bsigs = bsigs.join(losers, "bid", "left_anti")
+        # Both probes take the whole batch: a within-batch loser that
+        # also hits the store leaves either way, so neither plan nests
+        # the other, and novel ids never include a loser, so the store
+        # rows come from sigs directly.
+        losers = (_signature_probe(sigs, sigs, num_hashes, bands, threshold)
+                  .where(F.col("sid") < F.col("bid"))
+                  .select(F.col("bid").alias(id_col)).distinct())
+        batch = batch.join(losers, id_col, "left_anti")
         store = read_store()
         if store is not None:
-            store_bands = store.select(
-                F.col("id").alias("sid"), F.posexplode(bh).alias("band", "h"))
-            cands = (store_bands
-                     .join(F.broadcast(bbands), ["band", "h"])
-                     .select("bid", "sid").distinct())
-            dups = (store.join(F.broadcast(cands),
-                               store["id"] == F.col("sid"))
-                    .join(F.broadcast(bsigs), "bid")
-                    .where(signature_jaccard(F.col("bsig"), store["sig"],
-                                             num_hashes) >= thr)
+            dups = (_signature_probe(sigs, store, num_hashes, bands,
+                                     threshold)
                     .select(F.col("bid").alias(id_col)).distinct())
             batch = batch.join(dups, id_col, "left_anti")
         return batch, lambda novel: sigs.join(

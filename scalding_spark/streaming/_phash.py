@@ -29,19 +29,15 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
 
     1. ONE map-only perceptual-hash pass (multimodal.image_dhash /
        image_ahash — Arrow-batched, integer-exact) over the batch;
-    2. within-batch near-dup: the pigeonhole band self-join
-       (dedup.hamming_chunk_cols — same chunking as
-       hamming_band_pairs, so the ≤ max_hamming recall guarantee is
-       inherited), an image dropped when ANY smaller-id batch image
-       sits within ``max_hamming`` bits (the tier family's
-       smaller-id-survives rule — exact byte-dups hash identically and
-       are caught at hamming 0);
-    3. vs the store: the batch's chunk table (≤ (max_hamming+1)·|batch|
-       rows of ≤24 B) BROADCASTS against a map-only scan of the
-       (id, phash) store — the store is never shuffled and never
-       collected; the hamming verify FUSES into the probe join
-       (bit_count on the scanned hash), so the store pays one scan per
-       micro-batch, not two like the MinHash tier's estimator verify;
+    2. within-batch near-dup: an image is dropped when ANY smaller-id
+       batch image sits within ``max_hamming`` bits (the tier family's
+       smaller-id-survives rule). Identical-hash members above their
+       group's min id lose by a group-min lookup; the group mins then
+       run :func:`dedup._hamming_probe` against themselves;
+    3. vs the store: :func:`dedup._hamming_probe` of the group mins
+       against the (id, phash) store — one map-only scan with the
+       hamming verify fused into the join, the store never shuffled or
+       collected;
     4. novel images land in ``corpus_path``, their hashes in
        ``store_path``; crash/replay semantics and the
        ``compact_every_n_epochs`` hook: see
@@ -63,7 +59,8 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
     semantic tier's ``__bucket`` recipe) so the broadcast probe prunes
     directories; the chunking already matches.
     """
-    from scalding_spark.functions.dedup import hamming_chunk_cols
+    from scalding_spark.functions.dedup import (_hamming_probe,
+                                                hamming_chunk_cols)
     from scalding_spark.functions.multimodal import (audio_ehash,
                                                      image_ahash,
                                                      image_dhash)
@@ -81,67 +78,41 @@ def stream_ingest_phash(stream_df: DataFrame, corpus_path: str,
 
     def vet(batch: DataFrame, read_store):
         batch = batch.dropDuplicates([id_col])
-        # ONE hash pass; localCheckpoint: the hashes feed the self-join
-        # (twice), the store probe, and the store write — and release
-        # with the batch (the _neardup.py persist rationale).
+        # ONE hash pass; localCheckpoint: the hashes feed the group-min
+        # lookup, both probes and the store write — and release with the
+        # batch (the _neardup.py persist rationale).
         # keep=[id_col]: only (id, hash) returns from the Python pass —
         # the media bytes cross the Arrow boundary once, never back
         hs = (kernels[method](batch.select(F.col(id_col), content_col),
                               content_col=content_col, out_col="__ph",
                               hash_size=hash_size, keep=[id_col])
               .where(F.col("__ph").isNotNull())
-              .withColumnRenamed(id_col, "id")
+              .select(F.col(id_col).alias("id"), F.col("__ph").alias("phash"))
               .localCheckpoint())
-        ck = hamming_chunk_cols("__ph", max_hamming)
-        # Within-batch dedup in DISTINCT-HASH space (the r11
-        # hamming_band_pairs recipe): identical-hash members above the
-        # min id lose at hamming 0 BY DEFINITION (0 ≤ max_hamming), so
-        # they leave via a group-min lookup, never the band join — a
-        # crawl batch with n blank thumbnails costs one band row
-        # instead of C(n,2)·chunks self-join hits, and the store-probe
-        # BROADCAST below carries one row per distinct hash, not per
-        # image. Cross-hash losses reduce to the representatives:
-        # every non-rep member of a group shares its rep's hash, so
-        # "any smaller-id image within budget" holds for a rep iff it
-        # holds against some other group whose min id is smaller —
-        # exactly the rep-level band join (smaller-id-survives
-        # preserved; pinned by the batch≡stream parity suite).
-        reps = hs.groupBy("__ph").agg(F.min("id").alias("id"))
+        # Identical-hash members above the min id lose at hamming 0 BY
+        # DEFINITION, so they leave via a group-min lookup, never the
+        # probe — a crawl batch of n blank thumbnails costs one probe
+        # row, not C(n,2)·chunks hits. Every non-min member shares its
+        # min's hash, so cross-hash losses reduce to the group mins.
+        reps = hs.groupBy("phash").agg(F.min("id").alias("id"))
         member_losers = (hs.join(reps.withColumnRenamed("id", "__rid"),
-                                 "__ph")
+                                 "phash")
                          .where(F.col("id") != F.col("__rid"))
-                         .select("id"))
-        bchunks = reps.select(F.col("id").alias("bid"),
-                              F.col("__ph").alias("bph"),
-                              F.explode(ck).alias("ck"))
-        # rep-level band self-join + fused hamming verify; larger rep
-        # loses to ANY qualifying smaller rep
-        l, r = bchunks.alias("l"), bchunks.alias("r")
-        rep_losers = (l.join(r, (F.col("l.ck") == F.col("r.ck"))
-                             & (F.col("l.bid") < F.col("r.bid")))
-                      .where(F.bit_count(F.col("l.bph").bitwiseXOR(
-                          F.col("r.bph"))) <= max_hamming)
-                      .select(F.col("r.bid").alias("id")).distinct())
+                         .select(F.col("id").alias(id_col)))
+        # Both probes take every group min (the _neardup.py rationale:
+        # a loser that also hits the store leaves either way).
+        rep_losers = (_hamming_probe(reps, reps, max_hamming)
+                      .where(F.col("sid") < F.col("bid"))
+                      .select(F.col("bid").alias(id_col)))
         losers = member_losers.unionByName(rep_losers).distinct()
-        batch = batch.join(losers.withColumnRenamed("id", id_col),
-                           id_col, "left_anti")
-        hs = hs.join(losers, "id", "left_anti")
-        bchunks = bchunks.join(losers.withColumnRenamed("id", "bid"),
-                               "bid", "left_anti")
+        batch = batch.join(losers, id_col, "left_anti")
         store = read_store()
         if store is not None:
-            store_chunks = store.select(
-                F.col("phash"),
-                F.explode(hamming_chunk_cols("phash", max_hamming))
-                .alias("ck"))
-            dups = (store_chunks.join(F.broadcast(bchunks), "ck")
-                    .where(F.bit_count(F.col("phash").bitwiseXOR(
-                        F.col("bph"))) <= max_hamming)
+            dups = (_hamming_probe(reps, store, max_hamming)
                     .select(F.col("bid").alias(id_col)).distinct())
             batch = batch.join(dups, id_col, "left_anti")
-        return batch, lambda novel: (
-            hs.join(novel.select(F.col(id_col).alias("id")), "id")
-            .select("id", F.col("__ph").alias("phash")))
+        return batch, lambda novel: hs.join(
+            novel.select(F.col(id_col).alias("id")), "id")
 
     return _epoch_ingest(stream_df, corpus_path, store_path, checkpoint,
                          vet, compact_every_n_epochs, available_now)

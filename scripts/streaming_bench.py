@@ -1,16 +1,18 @@
-"""Throughput bench for the three streaming ingest tiers (VERDICT r07 #6).
+"""Throughput bench for the streaming ingest tiers (VERDICT r07 #6).
 
 Measures docs/s per tier — exact (md5 fingerprint store), neardup
 (MinHash signature store), semantic (normalized-vector store, flat AND
-bucketed layouts) — against a PRE-SEEDED store at the given sf's corpus
-size, so the number reported is the steady-state per-batch cost
-(store-probe + write), not the empty-store warm-up.
+bucketed layouts), phash (perceptual-hash store over the media
+q_image_neardup fabricates from the documents) — against a PRE-SEEDED
+store at the given sf's corpus size, so the number reported is the
+steady-state per-batch cost (store-probe + write), not the empty-store
+warm-up.
 
 Protocol per tier:
 
 1. seed: one availableNow run ingests the first ``1 - probe_frac`` of the
-   sf corpus (documents for text tiers, embeddings for semantic) — this
-   builds the store at sf size;
+   sf corpus (documents for text tiers, embeddings for semantic, media
+   for phash) — this builds the store at sf size;
 2. measure: the remaining docs are staged as ``batches`` parquet files
    and ingested with maxFilesPerTrigger=1 (one file per micro-batch)
    under the SAME checkpoint; wall time over the drain / probe docs =
@@ -47,18 +49,30 @@ ONLY = set(sys.argv[2:])
 PROBE_FRAC = 0.2
 BATCHES = 5
 
-TIERS = {
-    "exact": dict(table="documents", schema="doc_id long, text string",
-                  id_col="doc_id"),
-    "neardup": dict(table="documents", schema="doc_id long, text string",
-                    id_col="doc_id"),
-    "semantic": dict(table="embeddings",
-                     schema="vec_id long, embedding array<float>",
-                     id_col="vec_id"),
-    "semantic_bucketed": dict(table="embeddings",
-                              schema="vec_id long, embedding array<float>",
-                              id_col="vec_id"),
-}
+
+def _table(spark, name: str, *cols: str):
+    return spark.read.parquet(os.path.join(SF_DIR, name + ".parquet")) \
+        .select(*cols)
+
+
+def _docs(spark):
+    return _table(spark, "documents", "doc_id", "text")
+
+
+def _vectors(spark):
+    return _table(spark, "embeddings", "vec_id", "embedding")
+
+
+def _media(spark):
+    from __spark_entry__ import _fabricated_media
+    return _fabricated_media(_table(spark, "documents", "doc_id"))
+
+
+# tier -> (id column, source frame)
+TIERS = {"exact": ("doc_id", _docs), "neardup": ("doc_id", _docs),
+         "semantic": ("vec_id", _vectors),
+         "semantic_bucketed": ("vec_id", _vectors),
+         "phash": ("media_id", _media)}
 
 
 def start_tier(tier: str, stream_df, work: str, batch_cap: int):
@@ -81,21 +95,20 @@ def start_tier(tier: str, stream_df, work: str, batch_cap: int):
             stream_df, vec_col="embedding", id_col="vec_id",
             max_batch=batch_cap, store_buckets=4, probe_hamming=1,
             **common)
+    if tier == "phash":
+        return streaming.stream_ingest_phash(
+            stream_df, content_col="content", id_col="media_id", **common)
     raise ValueError(tier)
 
 
 def bench_tier(spark, tier: str) -> dict:
-    cfg = TIERS[tier]
-    src = spark.read.parquet(
-        os.path.join(SF_DIR, cfg["table"] + ".parquet"))
-    cols = [cfg["id_col"]] + (
-        ["text"] if cfg["table"] == "documents" else ["embedding"])
-    src = src.select(*cols)
+    id_col, source = TIERS[tier]
+    src = source(spark)
     total = src.count()
     n_probe = int(total * PROBE_FRAC)
     n_seed = total - n_probe
     # deterministic split by id rank — seed ids < probe ids
-    ordered = src.orderBy(cfg["id_col"])
+    ordered = src.orderBy(id_col)
     seed = ordered.limit(n_seed)
     probe = ordered.subtract(seed)
     # the seed run drains in ONE availableNow batch of n_seed vectors —
@@ -118,7 +131,7 @@ def bench_tier(spark, tier: str) -> dict:
         from pyspark.sql import Window
         ranked = probe.withColumn(
             "__rn",
-            F.row_number().over(Window.orderBy(cfg["id_col"])) - 1)
+            F.row_number().over(Window.orderBy(id_col)) - 1)
         for i in range(BATCHES):
             lo = i * per_batch
             hi = n_probe if i == BATCHES - 1 else lo + per_batch

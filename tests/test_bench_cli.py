@@ -64,7 +64,7 @@ def test_only_a_full_headline_run_writes_the_mirror(
     record = json.loads(line)
     assert mirror.read_text() == line
     assert set(record) == {"metric", "value", "unit", "queries", "sf",
-                           "first_run_total"}
+                           "first_run_total", "calibration_sec"}
     assert record["metric"] == "headline_total"
     assert list(record["queries"]) == headline
     assert record["sf"] == 0.001

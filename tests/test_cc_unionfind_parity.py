@@ -8,6 +8,7 @@ O(E·α(E)), so this parity holds at ANY corpus size; `scripts/sf1_parity.py`
 runs the same comparison on the 50k-doc sf1 expansion (results recorded in
 SCALING.md)."""
 
+import math
 import random
 
 import pytest
@@ -92,14 +93,21 @@ def test_cc_mixed_finish_runs_fewer_rounds(spark, monkeypatch):
 def test_cc_floating_ids_keep_the_rounds(spark):
     """numpy cannot order floating ids as Spark does (Spark sorts NaN above
     every value and equates -0.0 with 0.0), so a double-typed graph runs
-    the star rounds even though its cut is far under the default T."""
-    df = spark.createDataFrame([(1.5, 2.5), (2.5, 0.5), (3.0, 4.0)],
-                               "src double, dst double")
-    stats = {}
-    got = {r.node: r.comp for r in
-           dedup.connected_components(df, stats=stats).collect()}
-    assert got == {0.5: 0.5, 1.5: 0.5, 2.5: 0.5, 3.0: 3.0, 4.0: 3.0}
-    assert stats["iterations"] > 0
+    the star rounds even though its cut is far under the default T. A
+    NaN id is a node (only NULL endpoints are ignored); NULL-endpoint
+    edges still drop."""
+    nan = float("nan")
+    for rows, want in [
+            ([(1.5, 2.5), (2.5, 0.5), (3.0, 4.0)],
+             {0.5: 0.5, 1.5: 0.5, 2.5: 0.5, 3.0: 3.0, 4.0: 3.0}),
+            ([(1.5, nan), (nan, 0.5), (3.0, 4.0), (5.0, None)],
+             {0.5: 0.5, 1.5: 0.5, "nan": 0.5, 3.0: 3.0, 4.0: 3.0})]:
+        df = spark.createDataFrame(rows, "src double, dst double")
+        stats = {}
+        got = {("nan" if math.isnan(r.node) else r.node): r.comp for r in
+               dedup.connected_components(df, stats=stats).collect()}
+        assert got == want
+        assert stats["iterations"] > 0
 
 
 @pytest.mark.parametrize("edges,rounds", [

@@ -251,6 +251,66 @@ def test_stream_ingest_neardup_distinct_docs_all_kept(spark, tmp_path):
     assert sorted(r.doc_id for r in corpus.collect()) == [0, 1, 2, 3, 4]
 
 
+def test_stream_ingest_neardup_matches_python_golden(spark, sf_dir, tmp_path):
+    """batch ≡ stream vs the pure-Python mirror of the tier's rule, over
+    two epochs of the sf0.01 documents (even ids, then odd) plus crafted
+    near-dups: exact dedup keeps the min id per normalized text; a doc
+    whose banded candidate estimates ≥ threshold against ANY smaller-id
+    batch doc loses; survivors drop against the cumulative kept-signature
+    store; kept signed docs extend the store."""
+    import os
+
+    import py_reference as pr
+    num_hashes, bands, thr = 64, 16, 0.5
+    docs = pr._documents(os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    crafted = [
+        (1000, BASE), (1002, BASE.replace("lazy", "sleepy")),
+        (1004, BASE.upper() + "!"), (1006, "..."), (1008, None),
+        (1001, BASE.replace("dawn", "dusk")), (1003, "!!!"), (1005, "?"),
+        (1007, BASE.replace("river", "stream")), (1009, None),
+    ]
+    batches = [[r for r in docs + crafted if r[0] % 2 == p]
+               for p in (0, 1)]
+    paths = tuple(str(tmp_path / p) for p in ("ns", "nc", "nt", "nk"))
+    src, corpus, store_path, ckpt = paths
+    for rows in batches:
+        spark.createDataFrame(rows, DOC_SCHEMA).write.mode("append") \
+            .parquet(src)
+        stream = streaming.stream_from_parquet_dir(spark, src, DOC_SCHEMA)
+        streaming.stream_ingest_neardup(
+            stream, corpus_path=corpus, store_path=store_path,
+            checkpoint=ckpt, text_col="text", id_col="doc_id",
+            num_hashes=num_hashes, bands=bands,
+            threshold=thr).awaitTermination(300)
+    got = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
+    # pure-python mirror
+    store, kept = [], []
+    for rows in batches:
+        first = {}
+        for i, t in sorted(rows):
+            first.setdefault(None if t is None
+                             else " ".join(pr.tokenize(t)), i)
+        text = dict(rows)
+        sigs = {i: pr.minhash_signature(pr.shingles(text[i]), num_hashes)
+                for i in first.values() if pr.shingles(text[i])}
+        keys = {i: set(pr.minhash_band_keys(s, bands))
+                for i, s in sigs.items()}
+
+        def near(i, sig, ks):
+            return bool(keys[i] & ks) and \
+                pr.signature_estimate(sigs[i], sig) >= thr
+        drop = {i for i in sigs
+                if any(j < i and near(i, sigs[j], keys[j]) for j in sigs)}
+        for i in sorted(first.values()):
+            if i in drop or (i in sigs and any(near(i, *s) for s in store)):
+                continue
+            kept.append(i)
+            if i in sigs:
+                store.append((sigs[i], keys[i]))
+    assert 1002 not in kept and 1001 not in kept and 1003 in kept
+    assert got == sorted(kept)
+
+
 def test_signature_jaccard_estimator(spark):
     from scalding_spark.functions.dedup import (minhash_signatures,
                                                 signature_jaccard)
