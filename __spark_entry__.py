@@ -1703,8 +1703,8 @@ def q_linear_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embeddings table (similarity.kmeans):
-    map-only assignment against literal centroids, one partial-aggregated
-    (cell, dim) exchange per iteration, k·dim driver bytes per round.
+    one map-only pass per round that assigns and sums per cell in each
+    task, at most k rows per task to the driver.
     Rows-only check (iterative float argmin is not SQL-reproducible)."""
     emb = _t(spark, sf_dir, "embeddings")
     assigned, _ = similarity.kmeans(emb, k=8, max_iter=10, seed=42)

@@ -473,9 +473,10 @@ def kmeans_scalar(emb, k: int = 8, max_iter: int = 10, seed: int = 42,
            tol: float = 1e-4):
     """Mirror of similarity.kmeans: seeded-hash init, argmin squared-L2
     assignment (ties → lowest cell), per-(cell,dim) mean update, L∞ < tol
-    convergence. The means use exact sequential summation; Spark's partial
-    aggregation can differ by an ulp (documented in kmeans's docstring) —
-    assignments are compared, which are stable far beyond that."""
+    convergence. The means use exact sequential summation; Spark's
+    per-partition sums, added in partition order, can differ by an ulp
+    (documented in kmeans's docstring) — assignments are compared, which
+    are stable far beyond that."""
     cents = ivf_centroids(emb, k, seed)
     if not cents:
         # empty corpus — mirror of similarity.kmeans: no assignments,

@@ -34,6 +34,13 @@ def _norm(a: Column) -> Column:
         F.lit(0.0), lambda acc, x: acc + x))
 
 
+def _normalized(vec_col: str) -> Column:
+    """L2-normalized ``vec_col``; a zero vector normalizes to zeros."""
+    v, nrm = F.col(vec_col), _norm(F.col(vec_col))
+    return F.when(nrm > 0, F.transform(v, lambda x: x.cast("double") / nrm)) \
+        .otherwise(F.transform(v, lambda x: F.lit(0.0)))
+
+
 def cosine(a: Column, b: Column) -> Column:
     """NULL when either operand has zero norm (a zero vector has no
     direction): try_divide, not `/` — under ANSI mode a plain division
@@ -111,6 +118,22 @@ def _drop_null_vecs(df: DataFrame, vec_col: str) -> DataFrame:
     return df.where(F.col(vec_col).isNotNull())
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` (query_id, neighbor_id,
+    cosine): cosine DESC, ties to the smaller neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (scored.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") <= k).drop("__rn"))
+
+
+def _no_pairs(df: DataFrame, id_col: str, a: str, b: str) -> DataFrame:
+    """The empty (a, b, cosine) result, ids typed like ``df[id_col]``:
+    an empty or all-NULL-vector corpus yields no pairs, not an error."""
+    return (df.select(F.col(id_col).alias(a), F.col(id_col).alias(b),
+                      F.lit(None).cast("double").alias("cosine"))
+            .where(F.lit(False)))
+
+
 def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
                            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
@@ -128,9 +151,7 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .where(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k).drop("__rn"))
+    return _top_k(scored, k)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -169,12 +190,8 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
         first = corpus.select(F.size(vec_col)).first()
         if first is None:
             # empty / all-NULL-vector corpus: no hyperplanes can be sized —
-            # an empty result, not a crash (mirrors cosine_topk_ivf's
-            # empty-centroids path)
-            return (queries.select(F.col(id_col).alias("query_id"),
-                                   F.col(id_col).alias("neighbor_id"),
-                                   F.lit(None).cast("double").alias("cosine"))
-                    .where(F.lit(False)))
+            # an empty result, not a crash
+            return _no_pairs(queries, id_col, "query_id", "neighbor_id")
         dim = first[0]
     tables = [random_hyperplanes(dim, n_planes, seed + t * 1000) for t in range(n_tables)]
 
@@ -200,9 +217,7 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
                       cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine"))
               .groupBy("query_id", "neighbor_id")
               .agg(F.max("cosine").alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k).drop("__rn"))
+    return _top_k(scored, k)
 
 
 def ivf_centroids(corpus: DataFrame, n_cells: int = 16,
@@ -260,10 +275,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
         # empty corpus: no cells exist to probe — an empty result, not an
         # analysis error (F.array() of zero centroid structs types as VOID
         # and the cell extraction would fail at plan build)
-        return (queries.select(F.col(id_col).alias("query_id"),
-                               F.col(id_col).alias("neighbor_id"),
-                               F.lit(None).cast("double").alias("cosine"))
-                .where(F.lit(False)))
+        return _no_pairs(queries, id_col, "query_id", "neighbor_id")
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
         F.element_at(_nearest_cell(F.col(vec_col), centroids, 1), 1).alias("cell"))
@@ -274,9 +286,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .where(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k).drop("__rn"))
+    return _top_k(scored, k)
 
 
 def embedding_near_dup_exact(df: DataFrame, threshold: float = 0.95,
@@ -307,10 +317,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
         first = df.select(F.size(vec_col)).first()
         if first is None:
             # empty / all-NULL-vector corpus (see cosine_topk_lsh)
-            return (df.select(F.col(id_col).alias("id_a"),
-                              F.col(id_col).alias("id_b"),
-                              F.lit(None).cast("double").alias("cosine"))
-                    .where(F.lit(False)))
+            return _no_pairs(df, id_col, "id_a", "id_b")
         dim = first[0]
     tables = [random_hyperplanes(dim, n_planes, seed + t * 1000) for t in range(n_tables)]
     buckets = F.array(*[
@@ -361,23 +368,16 @@ def _fresh_name(base: str, df: DataFrame, *more_taken: str) -> str:
     return f"{base}_{i}"
 
 
-def _assign_cells_bcast(src: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """Same argmin-by-squared-L2 as :func:`_nearest_centroid_l2` (ties →
-    lowest cell index, bit-for-bit — pinned by
-    test_kmeans_bcast_assignment_matches_literal), with the centroids
-    travelling as DATA in the task closure and the n·k·dim distance work
-    done as blocked numpy matmuls in ONE Arrow-batched ``mapInPandas``
-    pass (r08 — replaced the broadcast-one-row crossJoin + per-element
-    HOF fold, which ground at ~40M multiply-adds/s and made Lloyd's
-    ASSIGN the auto-k cost center at sf1; dense all-pairs distance is
-    the Arrow+BLAS shape, SCALING.md). Consequences the HOF form bought
-    survive or improve:
-
-    - no generated code at all, so the per-iteration Janino-recompile
-      hazard of literal centroids is moot and k·dim has no codegen
-      ceiling;
-    - still map-only for the corpus: MapInPandas adds no exchange
-      (plan-pinned), centroids cost k·dim·8 bytes per task closure.
+def _nearest_cells(X, C):
+    """Argmin-by-squared-L2 cell of each row of ``X`` (n × dim float64)
+    against centroids ``C`` (k × dim float64, k ≥ 1): the one assign
+    kernel, run by both :func:`_assign_cells_bcast` and the Lloyd round
+    pass :func:`_cell_sums`, so a round and the final assignment decide
+    every row identically. Same argmin as :func:`_nearest_centroid_l2`
+    (ties → lowest cell index, bit-for-bit — pinned by
+    test_kmeans_bcast_assignment_matches_literal), done as blocked numpy
+    matmuls (dense all-pairs distance is the Arrow+BLAS shape,
+    SCALING.md; 2048-row blocks bound the distance block).
 
     EXACTNESS: the expansion-form distances decide only when clear of
     the minimum by a band scaled to the ROW'S MAGNITUDE —
@@ -391,85 +391,101 @@ def _assign_cells_bcast(src: DataFrame, cents: list[list[float]]) -> DataFrame:
     by the exact sequential fold the Column expression computes
     (per-element double subtract/square, left-to-right adds, Spark's
     NaN-is-greatest min and first-match equality), so the assigned cell
-    is bit-identical to the HOF/literal forms (a wider band only routes
-    MORE rows through the exact fold — it can never flip a decision).
-    Expects ``src`` with columns (id, v); returns (id, v, cell).
-    NULL vectors (contract: dropped upstream by ``_drop_null_vecs``)
-    pass through with cell NULL.
-    """
-    import math
+    is bit-identical to the literal form (a wider band only routes MORE
+    rows through the exact fold — it can never flip a decision)."""
+    import numpy as np
+    c2 = (C * C).sum(axis=1)
+    cl = C.tolist()
+    eps = 1e-6
 
+    def exact_cell(a):
+        ds = []
+        for c in cl:
+            acc = 0.0
+            for i in range(len(c)):
+                d = float(a[i]) - c[i]
+                acc += d * d
+            ds.append(acc)
+        best = min(ds, key=lambda d: (math.isnan(d), d))
+        return next(i for i, d in enumerate(ds) if d == best
+                    or (math.isnan(d) and math.isnan(best)))
+
+    cells = np.empty(len(X), dtype=np.int64)
+    B = 2048
+    for b0 in range(0, len(X), B):
+        Xb = X[b0:b0 + B]
+        x2 = (Xb * Xb).sum(axis=1)
+        D = x2[:, None] + c2[None, :] - 2.0 * (Xb @ C.T)
+        # per-row band: relative to the distance magnitudes in play
+        # (‖x‖²+max‖c‖²), floored at the old absolute 1e-6 so
+        # unit-embedding behavior is unchanged (ADVICE r08 #1)
+        with np.errstate(invalid="ignore"):
+            band = eps * np.maximum(1.0, x2 + c2.max())
+            m = np.nanmin(D, axis=1)
+            cand = D <= (m + 2 * band)[:, None]
+        clear = (cand.sum(axis=1) == 1) & np.isfinite(D).all(axis=1)
+        cells[b0:b0 + B] = cand.argmax(axis=1)
+        for j in np.flatnonzero(~clear):
+            cells[b0 + j] = exact_cell(Xb[j])
+    return cells
+
+
+def _assign_cells_bcast(src: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """Nearest-centroid cell of every row: :func:`_nearest_cells` in ONE
+    Arrow-batched ``mapInPandas`` pass, the centroids travelling as DATA
+    in the task closure (k·dim·8 bytes per task). No generated code, so
+    k·dim has no codegen ceiling, and MapInPandas adds no exchange
+    (plan-pinned). Expects ``src`` with columns (id, v); returns
+    (id, v, cell). NULL vectors (contract: dropped upstream by
+    ``_drop_null_vecs``) pass through with cell NULL.
+    """
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     if not cents:
-        # no centroids → no nearest cell (the HOF form's array_min over
-        # an empty array was NULL); empty-corpus kmeans hits this
+        # no centroids → no nearest cell (the literal form's array_min
+        # over an empty array is NULL); empty-corpus kmeans hits this
         return src.withColumn("cell", F.lit(None).cast("int"))
-    C = np.asarray([[float(x) for x in c] for c in cents],
-                   dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-    cl = [[float(x) for x in c] for c in cents]
-    eps = 1e-6
-    out_schema = StructType(list(src.schema.fields)
-                            + [StructField("cell", IntegerType())])
-
-    def _exact_d(a, c):
-        acc = 0.0
-        for i in range(len(c)):
-            d = float(a[i]) - c[i]
-            acc += d * d
-        return acc
-
-    def _exact_cell(a):
-        ds = [_exact_d(a, c) for c in cl]
-        best = None
-        for d in ds:
-            if best is None or math.isnan(best) or \
-                    (not math.isnan(d) and d < best):
-                best = d
-        for i, d in enumerate(ds):
-            if d == best or (math.isnan(d) and math.isnan(best)):
-                return i
-        return None
+    C = np.asarray(cents, dtype=np.float64)
 
     def assign(batches):
         import pandas as pd
         for pdf in batches:
-            n = len(pdf)
-            cells = [None] * n
-            vec_rows = pdf["v"].tolist()
-            B = 2048
-            for b0 in range(0, n, B):
-                b1 = min(b0 + B, n)
-                block = [v for v in vec_rows[b0:b1]]
-                ok = [i for i, v in enumerate(block) if v is not None]
-                if not ok:
-                    continue
-                X = np.asarray([np.asarray(block[i], dtype=np.float64)
-                                for i in ok])
-                x2 = (X * X).sum(axis=1)
-                D = x2[:, None] + c2[None, :] - 2.0 * (X @ C.T)
-                # per-row band: relative to the distance magnitudes in
-                # play (‖x‖²+max‖c‖²), floored at the old absolute 1e-6
-                # so unit-embedding behavior is unchanged (ADVICE r08 #1)
-                with np.errstate(invalid="ignore"):
-                    band = eps * np.maximum(1.0, x2 + c2.max())
-                    m = np.nanmin(D, axis=1)
-                    cand = D <= (m + 2 * band)[:, None]
-                counts = cand.sum(axis=1)
-                firsts = cand.argmax(axis=1)
-                finite = np.isfinite(D).all(axis=1)
-                for j, i in enumerate(ok):
-                    if counts[j] == 1 and finite[j]:
-                        cells[b0 + i] = int(firsts[j])
-                    else:
-                        cells[b0 + i] = _exact_cell(X[j])
-            out = pdf.copy()
-            out["cell"] = pd.array(cells, dtype="Int32")
-            yield out
+            ok = pdf["v"].notna().to_numpy()
+            cells = np.zeros(len(pdf), dtype=np.int32)
+            if ok.any():
+                cells[ok] = _nearest_cells(np.asarray(
+                    pdf["v"][ok].tolist(), dtype=np.float64), C)
+            yield pdf.assign(cell=pd.arrays.IntegerArray(cells, ~ok))
 
-    return src.mapInPandas(assign, out_schema)
+    return src.mapInPandas(assign, StructType(
+        list(src.schema.fields) + [StructField("cell", IntegerType())]))
+
+
+def _cell_sums(src: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """One Lloyd round, map-side: each partition assigns its rows of
+    ``src`` (non-null ``v``) with :func:`_nearest_cells`, then sums vectors
+    and counts rows per cell in row order — at most k rows (cell, n, s)
+    per partition, no exchange (Scalding's map-side SummingCache)."""
+    import numpy as np
+    C = np.asarray(cents, dtype=np.float64)
+
+    def sums(batches):
+        import pandas as pd
+        S, N = np.zeros_like(C), np.zeros(len(C), dtype=np.int64)
+        for pdf in batches:
+            if len(pdf):
+                X = np.asarray(pdf["v"].tolist(), dtype=np.float64)
+                cells = _nearest_cells(X, C)
+                np.add.at(S, cells, X)  # unbuffered: row order per cell
+                N += np.bincount(cells, minlength=len(C))
+        nz = np.flatnonzero(N)
+        if len(nz):  # an empty list column has no Arrow list type
+            yield pd.DataFrame({"cell": nz.astype(np.int32), "n": N[nz],
+                                "s": list(S[nz])})
+
+    return src.select("v").mapInPandas(
+        sums, "cell int, n long, s array<double>")
 
 
 def kmeans(corpus: DataFrame, k: int = 8, max_iter: int = 10,
@@ -478,66 +494,54 @@ def kmeans(corpus: DataFrame, k: int = 8, max_iter: int = 10,
            stats: dict | None = None) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means over an embedding column, Spark-first.
 
-    Per iteration:
-    - ASSIGN is map-only: centroids ride a broadcast one-row crossJoin
-      (:func:`_assign_cells_bcast`), so the corpus is never shuffled for
-      assignment AND the generated code is identical every round
-      (codegen-cache hit; plan-literal centroids would recompile per
-      iteration and cap k·dim at codegen limits).
-    - UPDATE is one partial-aggregated exchange: posexplode to
-      (cell, dim, value) then groupBy(cell, dim) mean — the map side
-      combines to ≤ k·dim rows per task, so the shuffle carries
-      O(k·dim·partitions) bytes regardless of corpus size, and the driver
-      collects exactly k·dim numbers (the new centroids), never vectors.
-      (Measured dead end, r05: an explode-free groupBy(cell) with one avg
-      column per dimension is ~65% SLOWER at 5k×64 — 2·dim agg buffers
-      exceed spark.sql.codegen.maxFields (100), dropping the whole update
-      out of whole-stage codegen. The posexplode plan stays codegen'd.)
+    One round is one map-only pass, :func:`_cell_sums`: every task
+    assigns its rows with the one assign kernel (:func:`_nearest_cells`,
+    centroids as task-closure data) and sums vectors and counts per cell
+    in numpy. The driver collects at most k rows per partition — never
+    vectors, never a shuffle — adds them and divides. The final
+    assignment (:func:`_assign_cells_bcast`) runs the same kernel.
 
     Convergence: max centroid shift (L∞ over all coordinates) < ``tol``.
-    Empty cells keep their previous centroid. Deterministic for a fixed
-    (corpus, k, seed, PARTITIONING): init picks corpus vectors by
-    seeded-hash order (:func:`ivf_centroids`), but the UPDATE means use
-    ``F.avg`` over doubles, whose partial-aggregation order follows the
-    partition layout — re-running under a different parallelism can drift
-    centroids by an ulp (cluster assignments are stable well past that;
-    compare centroids with a tolerance, not ``==``).
+    Empty cells keep their previous centroid. Init picks corpus vectors
+    by seeded-hash order (:func:`ivf_centroids`). Each partition sums its
+    rows in row order and the driver adds the partition sums in
+    partition-index order, so the centroids depend on the partitioning
+    by an ulp (one partition reproduces ``py_reference.kmeans``'s
+    sequential sums bit-for-bit); assignments do not — compare centroids
+    with a tolerance, not ``==``.
 
     Returns (assignments DataFrame (id, cell), final centroids).
-    ``stats['iterations']`` reports rounds run.
+    ``stats``: ``iterations`` (rounds run), ``update_rows`` (rows collected).
     """
+    import numpy as np
     cents = ivf_centroids(corpus, k, id_col=id_col, vec_col=vec_col, seed=seed)
     # null-vector rows have no position in the space: no assignment row
     # (semantic_dedup's anti-join therefore always KEEPS them)
     src = _drop_null_vecs(corpus, vec_col) \
         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # iterative-read amortization: every round scans the corpus once for
-    # the update agg (and once more for the final assignment) — persist so
-    # 10 iterations cost one read, not ten; unpersisted before returning
+    # iterative-read amortization: every round scans the corpus once
+    # (and once more for the final assignment) — persist so 10
+    # iterations cost one read, not ten; unpersisted before returning
     # (the returned assignment plan re-reads the source lineage lazily).
     # The iteration table's partition count is sized to the DATA, not the
     # cluster default: every round schedules one task per partition, so a
     # tiny corpus in 32 partitions pays 32× the scheduling overhead per
     # round for nothing (measured 1.2 s/round on 2k vectors, overhead-
-    # bound). ~50k dim-64 vectors ≈ 25 MB per task; at real scale the
-    # formula saturates at the input's own partition count — a no-op.
+    # bound).
     from pyspark import StorageLevel
     cached = src.persist(StorageLevel.MEMORY_AND_DISK)
     n_rows = cached.count()  # materializes the cache (no extra lineage pass)
     parts = cached.rdd.getNumPartitions()
     # Task sizing by WORK, not rows: each round's per-row assignment cost
     # is k·dim (argmin over all centroids), so the unit is row×centroid
-    # products — ~100k per task ≈ one short task at measured HOF
-    # throughput. The r05 row-count formula (50k rows/task) missed the k
-    # factor: at sf1 auto-k (20k rows × k=134, a single 10 MB input
-    # partition) it funneled 17 B fused ops through ONE task while 31
-    # cores idled — measured 259 s → 30 s for q_semantic_dedup_auto.
+    # products, ~100k per task. The r05 row-count formula (50k rows/task)
+    # missed the k factor: at sf1 auto-k (20k rows × k=134, a single 10 MB
+    # input partition) it funneled 17 B fused ops through ONE task while
+    # 31 cores idled — measured 259 s → 30 s for q_semantic_dedup_auto.
     # Repartition UP only when a partition holds >100k products (>~0.5 s
     # of compute — the shuffle of those same small rows is cheaper than
     # the idle imbalance); at real scale the input's own partition count
     # exceeds the formula and this stays a narrow coalesce or a no-op.
-    # Layout change shifts avg() partial-agg order by an ulp — inside the
-    # documented tolerance (assignments compared, not centroids).
     k_eff = max(len(cents), 1)
     target = max(1, min(src.sparkSession.sparkContext.defaultParallelism,
                         (n_rows * k_eff + 99_999) // 100_000))
@@ -546,20 +550,23 @@ def kmeans(corpus: DataFrame, k: int = 8, max_iter: int = 10,
         # cached blocks through fewer tasks — no recompute, no shuffle
         src = cached.coalesce(target)
     elif target > parts:
-        src = cached.repartition(target)
+        # shuffle once, into a cache of its own — not once per round
+        src = cached.repartition(target).persist(StorageLevel.MEMORY_AND_DISK)
     else:
         src = cached
-    iters = 0
+    iters = updates = 0
     try:
         for _ in range(max_iter):
             iters += 1
-            assigned = _assign_cells_bcast(src, cents)
-            sums = (assigned.select("cell", F.posexplode("v").alias("dim", "x"))
-                    .groupBy("cell", "dim")
-                    .agg(F.avg(F.col("x").cast("double")).alias("m")))
-            new_cents = [list(c) for c in cents]  # empty cells keep position
-            for r in sums.collect():              # ≤ k·dim tiny rows
-                new_cents[r.cell][r.dim] = r.m
+            S, N = np.zeros(np.shape(cents)), np.zeros(len(cents), dtype=int)
+            rows = _cell_sums(src, cents).collect()  # partition order
+            updates += len(rows)
+            for r in rows:
+                S[r.cell] += r.s
+                N[r.cell] += r.n
+            # empty cells keep their position
+            new_cents = [(S[i] / N[i]).tolist() if N[i] else c
+                         for i, c in enumerate(cents)]
             shift = max((abs(a - b)
                          for row_a, row_b in zip(cents, new_cents)
                          for a, b in zip(row_a, row_b)), default=0.0)
@@ -570,9 +577,11 @@ def kmeans(corpus: DataFrame, k: int = 8, max_iter: int = 10,
         # no storage leak — even when an iteration throws: the returned
         # plan recomputes src lazily (one ordinary map-only corpus read
         # when the caller materializes it)
+        src.unpersist()
         cached.unpersist()
     if stats is not None:
         stats["iterations"] = iters
+        stats["update_rows"] = updates
     out = _assign_cells_bcast(src, cents).select("id", "cell")
     return out, cents
 
@@ -676,12 +685,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     # recompute BOTH norms per PAIR — 3x the quadratic-stage flops); a
     # zero vector normalizes to zeros, so its dot with anything is 0 and
     # it is never dropped (same contract as cosine's undefined-is-false)
-    v = F.col("v")
-    nrm = _norm(v)
-    vecn = F.when(nrm > 0, F.transform(
-        v, lambda x: x.cast("double") / nrm)).otherwise(
-        F.transform(v, lambda x: F.lit(0.0)))
-    e = assigned.select("id", vecn.alias("vec"), "cell")
+    e = assigned.select("id", _normalized("v").alias("vec"), "cell")
     # within-cell pass (r08 — replaced the cell self-join + per-pair HOF
     # _dot, which ground at ~40M multiply-adds/s and made the pair stage
     # the sf1 cost center at pinned k: Σ n_c²·dim fused-lambda ops): ONE
@@ -781,20 +785,15 @@ def semantic_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     bv = _fresh_name("__bvecs", corpus)
     vn = _fresh_name("__vecn", corpus, bv)
     bdf = _arrow_frame(spark, [[bnorm]], f"{bv}: array<array<double>>")
-    v = F.col(vec_col)
-    nrm = _norm(v)
-    vecn = F.when(nrm > 0, F.transform(
-        v, lambda x: x.cast("double") / nrm)).otherwise(
-        F.transform(v, lambda x: F.lit(0.0)))
     # materialize the normalized vector as a COLUMN before the exists:
     # Catalyst does not common-subexpression across lambda boundaries, so
-    # an inline vecn re-runs the norm + divide + array alloc once per
+    # an inline normalization re-runs the norm + divide + array alloc once per
     # BENCHMARK element per row — measured 187 s → ~2 s at sf1
     # (20k×64 corpus, 541-vector benchmark). Bit-identical results.
     hit = F.exists(F.col(bv),
                    lambda b: _dot(F.col(vn), b)
                    >= F.lit(float(threshold)))
-    return (corpus.withColumn(vn, vecn)
+    return (corpus.withColumn(vn, _normalized(vec_col))
             .crossJoin(F.broadcast(bdf))
             .where(~F.coalesce(hit, F.lit(False)))
             .drop(bv, vn))

@@ -41,7 +41,7 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
        broadcast-row ``F.exists`` HOF, whose per-element lambda cost
        made this tier throughput-flat; bit-identical results via the
        ±1e-9 boundary-band exact-fold contract, see
-       :func:`_within_batch_hits`);
+       :func:`similarity._greedy_smaller_id_hits`);
     3. vs the store: ONE Arrow-batched map-only pass over the store
        (``mapInPandas``: numpy matmul per store block — the dense
        all-pairs dot is the shape where Arrow+BLAS beats codegen'd HOFs
@@ -102,9 +102,9 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
     layout check — mixed-precision parquet fragments would corrupt the
     scan schema).
     """
-    from scalding_spark.functions.similarity import (_drop_null_vecs,
-                                                     lsh_bucket,
-                                                     random_hyperplanes)
+    from scalding_spark.functions.similarity import (
+        _drop_null_vecs, _greedy_smaller_id_hits, _normalized, lsh_bucket,
+        random_hyperplanes)
     from scalding_spark.session import _arrow_frame
     from scalding_spark.streaming import _epoch_ingest
     thr = float(threshold)
@@ -166,7 +166,7 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
             # op-for-op (per-element double square, sequential left-fold
             # add, IEEE sqrt/divide), so kept ids are bit-identical to
             # the Column-expression form the parity tests compare against.
-            dropped = _within_batch_hits(barr, thr)
+            dropped = _greedy_smaller_id_hits(barr, thr)
             if dropped:
                 from pyspark.sql.types import StructField, StructType
                 ddf = _arrow_frame(batch.sparkSession, [dropped], StructType(
@@ -232,17 +232,6 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
                          vet, compact_every_n_epochs, available_now,
                          store_parts=() if store_buckets is None
                          else ("__bucket",))
-
-
-def _within_batch_hits(barr, thr: float) -> list:
-    """Ids of batch vectors vetted by a SMALLER-id batch vector at cosine
-    ≥ ``thr`` (the within-batch greedy-by-id rule), computed driver-side
-    over the already-collected normalized vectors. Thin wrapper over the
-    shared kernel (r08: semantic_dedup's within-cell pass uses the same
-    blocked-matmul + ±1e-9 exact-fold contract —
-    :func:`scalding_spark.functions.similarity._greedy_smaller_id_hits`)."""
-    from scalding_spark.functions.similarity import _greedy_smaller_id_hits
-    return _greedy_smaller_id_hits(barr, thr)
 
 
 def _vectorized_store_probe(store, barr, thr: float, id_col: str,
@@ -323,14 +312,3 @@ def _probe_buckets(vecs, planes: list[list[float]],
         masks += [sum(1 << i for i in c)
                   for c in combinations(range(nbits), r)]
     return sorted({b ^ m for b in base for m in masks})
-
-
-def _normalized(vec_col: str):
-    """L2-normalized copy of ``vec_col`` (zero vector → zeros), the
-    similarity-family convention."""
-    from scalding_spark.functions.similarity import _norm
-    v = F.col(vec_col)
-    nrm = _norm(v)
-    return F.when(nrm > 0, F.transform(
-        v, lambda x: x.cast("double") / nrm)).otherwise(
-        F.transform(v, lambda x: F.lit(0.0)))

@@ -19,8 +19,9 @@ Protocol per tier:
    docs/s with the store at sf scale.
 
 Prints one JSON line per (tier, layout) with store size, probe size,
-batch count, seconds, and docs/s — paste into SCALING.md's streaming
-table. Usage:
+batch count, seconds, docs/s and ``calibration_sec`` (perfbench's
+host-speed probe, read just before the timed run) — paste into
+SCALING.md's streaming table. Usage:
 
     python scripts/streaming_bench.py [sf_dir] [tier ...]
     # defaults: /root/testdata/sf0.1, all tiers
@@ -41,6 +42,7 @@ sys.path.insert(0, HERE)
 
 from pyspark.sql import functions as F
 
+from perfbench.run import calibrate
 from scalding_spark import streaming
 from scalding_spark.session import get_spark
 
@@ -142,6 +144,9 @@ def bench_tier(spark, tier: str) -> dict:
 
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src_dir))
+        # one host-speed reading right before the timed run, so a drifted
+        # pair of records can be told apart from a plan change
+        calibration = calibrate(spark)
         t0 = time.perf_counter()
         q = start_tier(tier, stream, work, batch_cap)
         q.awaitTermination()
@@ -149,7 +154,8 @@ def bench_tier(spark, tier: str) -> dict:
         return {"tier": tier, "sf_dir": SF_DIR, "store_docs": store_docs,
                 "probe_docs": probe_docs, "batches": BATCHES,
                 "sec": round(sec, 2),
-                "docs_per_sec": round(probe_docs / sec, 1)}
+                "docs_per_sec": round(probe_docs / sec, 1),
+                "calibration_sec": round(calibration, 3)}
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

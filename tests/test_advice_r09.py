@@ -1,6 +1,6 @@
 """Round-9 regression pins for the r08 ADVICE findings.
 
-1. _assign_cells_bcast's exact-fold band scales with the row's
+1. The assign kernel's (_nearest_cells) exact-fold band scales with the row's
    magnitude (``1e-6 · max(1, ‖x‖² + max‖c‖²)``): expansion-form
    cancellation error grows with operand magnitudes, so an ABSOLUTE
    1e-6 band silently under-covered unnormalized vectors with norms
@@ -31,8 +31,8 @@ from pyspark.sql import functions as F
 def test_assign_band_scales_with_row_magnitude():
     """Source pin: the candidate band must be per-row, scaled by
     ‖x‖² + max‖c‖² (floored at the old absolute 1e-6)."""
-    from scalding_spark.functions.similarity import _assign_cells_bcast
-    src = inspect.getsource(_assign_cells_bcast)
+    from scalding_spark.functions.similarity import _nearest_cells
+    src = inspect.getsource(_nearest_cells)
     assert "c2.max()" in src and "np.maximum(1.0" in src, (
         "the exact-fold band must scale with the row/centroid "
         "magnitudes — an absolute band under-covers large unnormalized "

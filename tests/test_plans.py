@@ -281,7 +281,7 @@ def test_linear_quality_is_map_only(spark):
 
 def test_kmeans_assignment_is_map_only(spark):
     """The assignment pass against literal centroids must not shuffle the
-    corpus — only the (cell, dim) update aggregation may exchange."""
+    corpus."""
     from scalding_spark.functions import similarity
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents = similarity.ivf_centroids(emb, 4)
@@ -302,6 +302,20 @@ def test_kmeans_bcast_assignment_no_corpus_shuffle(spark):
     p = plan(similarity._assign_cells_bcast(src, cents))
     assert "hashpartitioning" not in p and "rangepartitioning" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+
+
+def test_kmeans_round_pass_has_no_exchange(spark):
+    """A Lloyd round (_cell_sums) assigns and sums per cell inside each
+    task: its plan holds no Exchange of any kind, so one round is one
+    map-only stage and the driver collects at most k rows per task."""
+    from scalding_spark.functions import similarity
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cents = similarity.ivf_centroids(emb, 4)
+    src = similarity._drop_null_vecs(emb, "embedding").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    p = plan(similarity._cell_sums(src, cents))
+    assert "Exchange" not in p, p
+    assert "MapInPandas" in p, p
 
 
 def test_kmeans_bcast_assignment_matches_literal(spark):

@@ -16,8 +16,8 @@ run with::
 
 Bounds are the measured r05 exponents plus slack: winnow candidates grew
 at 1.26 (bound 1.4), fuzzy at 1.08 at constant key density (bound 1.2),
-bloom suspects at 1.03 (bound 1.15), and kmeans' per-round update shuffle
-is partition-count-bound (independent of n).
+bloom suspects at 1.03 (bound 1.15), and kmeans' per-round update traffic
+is partition-count-bound (≤ k rows per task, no shuffle; independent of n).
 """
 
 import math
@@ -83,17 +83,21 @@ def test_bloom_suspect_exponent(spark, corpora):
         assert m[n]["candidates"] < 0.2 * m[n]["rows_in"]
 
 
-def test_kmeans_update_shuffle_independent_of_n(spark):
-    """The per-round update shuffle carries O(k·dim·partitions) bytes —
-    map-side combine caps each task at k·dim rows — so 10× the corpus
-    must NOT move 10× the bytes per round."""
+def test_kmeans_update_traffic_independent_of_n(spark):
+    """A Lloyd round's update traffic is the ≤ k rows per task the
+    driver collects (per-partition cell sums), and no shuffle at all —
+    so 10× the corpus moves no more per round than k × partitions rows
+    and zero shuffle bytes."""
     import scaling
     m = {n: scaling.op_kmeans(spark, n) for n in (2000, 20000)}
-    small = max(m[2000]["shuffle_w_per_round"], 1)
-    big = m[20000]["shuffle_w_per_round"]
-    assert big <= 4 * small + 65536, (
-        f"kmeans per-round update shuffle grew with n: {m} — did the "
-        f"partial aggregate (map-side combine) drop out of the plan?")
+    k_rows = 8 * spark.sparkContext.defaultParallelism
+    for n, r in m.items():
+        assert r["shuffle_w_per_round"] == 0, (
+            f"kmeans rounds shuffle at n={n}: {m} — did an exchange "
+            f"come back into the round pass?")
+        assert r["update_rows_per_round"] <= k_rows, (
+            f"kmeans collects more than k rows per task per round at "
+            f"n={n}: {m} — did the per-partition sums stop combining?")
 
 
 def test_neardup_against_output_tracks_batch(spark, corpora):

@@ -603,13 +603,13 @@ def _fold_dot(a, b):
 
 
 def test_within_batch_hits_matches_bruteforce_rule():
-    """_within_batch_hits == the literal greedy-by-id rule (drop i when
-    ANY smaller-id vector's exact-fold dot clears thr), on random unit
-    vectors across the block boundary (n > 1024 exercises the row
-    blocking)."""
+    """The within-batch rule (similarity._greedy_smaller_id_hits) == the
+    literal greedy-by-id rule (drop i when ANY smaller-id vector's
+    exact-fold dot clears thr), on random unit vectors across the block
+    boundary (n > 1024 exercises the row blocking)."""
     import math
     import random
-    from scalding_spark.streaming._semantic import _within_batch_hits
+    from scalding_spark.functions.similarity import _greedy_smaller_id_hits
     rng = random.Random(5)
     barr = []
     for i in range(1500):
@@ -624,14 +624,14 @@ def test_within_batch_hits_matches_bruteforce_rule():
         for b in range(a + 1, len(by_id)):
             if _fold_dot(by_id[a][1], by_id[b][1]) >= thr:
                 expect.add(by_id[b][0])
-    assert set(_within_batch_hits(barr, thr)) == expect
+    assert set(_greedy_smaller_id_hits(barr, thr)) == expect
 
 
 def test_within_batch_hits_boundary_band_is_exact():
     """Pairs whose dot lands WITHIN the ±1e-9 numpy prefilter band must
     be decided by the exact sequential fold — construct dots straddling
     the threshold by <1e-9 and check each side."""
-    from scalding_spark.streaming._semantic import _within_batch_hits
+    from scalding_spark.functions.similarity import _greedy_smaller_id_hits
     thr = 0.75
     base = [1.0, 0.0]
     for delta, should_hit in [(1e-12, True), (-1e-12, False),
@@ -641,7 +641,7 @@ def test_within_batch_hits_boundary_band_is_exact():
         other = [d, math.sqrt(max(0.0, 1 - d * d))]
         exact = _fold_dot(base, other)
         barr = [(1, base), (2, other)]
-        hits = _within_batch_hits(barr, thr)
+        hits = _greedy_smaller_id_hits(barr, thr)
         assert (2 in hits) == (exact >= thr), (delta, exact)
         assert 1 not in hits
 
