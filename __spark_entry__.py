@@ -2998,7 +2998,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 # Queries whose operator changed since their last driver row: they lead the
 # window ahead of the rotation. Reset when the driver has re-checked them.
-REVERIFY = ("q_cc_star", "q_dedup_clusters", "q_dedup_keep_best")
+REVERIFY = ("q_cc_star", "q_dedup_clusters", "q_dedup_keep_best",
+            "q_semantic_decontam", "q_semantic_dedup")
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 

@@ -224,7 +224,11 @@ def main(argv: list[str] | None = None) -> None:
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1000) \
         .write.mode("overwrite").format("noop").save()
     # one host-speed reading (perfbench's probe) to tell host drift from
-    # plan change when comparing records from different windows
+    # plan change when comparing records from different windows. Its Spark
+    # half depends on the session it is handed, so it compares only with
+    # other bench.py readings: on one 4-core host within an hour it read
+    # 1.65-1.91 s here, 0.50-0.63 s in perfbench and 1.13 s in
+    # scripts/streaming_bench.py.
     from perfbench.run import calibrate
     calibration = calibrate(spark)
 

@@ -281,14 +281,16 @@ def remove_duplicate_lines(df: DataFrame, text_col: str, id_col: str,
 # this. r12 calibration bracket: 25 → doc-space 2.05× faster, 250 →
 # parity, unbounded beyond (see the docstring's measured table).
 _DOC_SPACE_BLOWUP_FACTOR = 100.0
+# Stage-1 fast path: distinct shingle sets at or above this share of the
+# docs take doc-space without the group-size pass.
+_ORGANIC_RATIO = 0.98
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                         n: int = 3, threshold: float = 0.8,
                         max_doc_freq: int | None = 1000,
                         persist_index: bool = True,
-                        space: str = "auto",
-                        organic_ratio: float = 0.98) -> DataFrame:
+                        space: str = "auto") -> DataFrame:
     """Exact n-gram Jaccard similar pairs via an inverted shingle index.
 
     Plan: explode distinct shingles → self-join on shingle (the inverted
@@ -334,7 +336,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 
     1. One scalar aggregate over the tokenized frame (count,
        countDistinct(id), countDistinct(id,set), countDistinct(set)).
-       Distinct sets ≥ ``organic_ratio`` of docs → doc-space (the common
+       Distinct sets ≥ ``_ORGANIC_RATIO`` (0.98) of docs → doc-space (the common
        organic-corpus fast path: no md5-keyed exchange at all).
     2. Otherwise (duplicate-heavy) a group-size aggregate estimates the
        doc-space candidate multiplication factor Σm²/n (m = docs per
@@ -402,7 +404,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                 "distinct text (this would corrupt the group relabeling "
                 "and double-count document frequencies)")
         if st["n"] == 0 or (st["n"] == st["dg"]
-                            and st["g"] >= organic_ratio * st["n"]):
+                            and st["g"] >= _ORGANIC_RATIO * st["n"]):
             space = "doc"
         elif st["n"] > st["dg"]:
             # duplicate (id, text) ROWS: only set-space's documented

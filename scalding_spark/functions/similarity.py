@@ -19,8 +19,6 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from scalding_spark.session import _arrow_frame
-
 
 def _dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double precision, left-to-right (deterministic)."""
@@ -51,60 +49,82 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
+def _unit_rows(X):
+    """Rows of ``X`` (n × dim float64) L2-normalized the way
+    :func:`_normalized` computes them — per-element double square,
+    left-fold add over the columns, IEEE sqrt, divide — bit for bit,
+    plus the mask of rows that HAVE a direction. A zero or NaN norm (a
+    NULL element arrives from Arrow as NaN) means no direction: the row
+    comes back all zeros and its mask entry is False."""
+    import numpy as np
+    acc = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        acc += X[:, j] * X[:, j]
+    nrm = np.sqrt(acc)
+    ok = nrm > 0
+    U = np.zeros_like(X)
+    with np.errstate(invalid="ignore"):  # an Inf element: Inf/Inf
+        U[ok] = X[ok] / nrm[ok, None]
+    return U, ok
+
+
+def _vetted(P, Q, thr: float, p_ids=None, q_ids=None):
+    """``hit[j]`` is True when some row of ``P`` reaches dot ≥ ``thr``
+    with row ``j`` of ``Q`` — with ids given, only a strictly smaller
+    ``p_id`` counts (id VALUES: duplicate ids never pair; numpy ``<`` is
+    Spark's order for integral and string ids). The one threshold test
+    of the semantic family: semantic_dedup's cells, semantic_decontaminate
+    and the semantic ingest tier's within-batch pass and store probe.
+
+    Blocked numpy matmul (1024 rows of ``P`` per block) with the
+    two-phase exactness contract: dots clear of ``thr`` by ±1e-9 decide
+    directly (float64 matmul error ≲1e-13 on unit vectors); dots inside
+    the band are re-decided by the exact left-to-right fold ``_dot``
+    computes (per-element double multiply, sequential double adds), so
+    hits are bit-identical to the Column-expression form. A NaN dot
+    fails both phases: a row with a non-finite element vets nothing and
+    is vetted by nothing."""
+    import numpy as np
+    eps = 1e-9
+    hit = np.zeros(len(Q), dtype=bool)
+    B = 1024
+    for i0 in range(0, len(P), B):
+        dots = P[i0:i0 + B] @ Q.T
+        if p_ids is not None:
+            dots[~(p_ids[i0:i0 + B, None] < q_ids[None, :])] = np.nan
+        hit |= (dots >= thr + eps).any(axis=0)
+        for r, c in np.argwhere((dots >= thr - eps) & (dots < thr + eps)):
+            if not hit[c]:
+                acc = 0.0
+                for p, q in zip(P[i0 + r].tolist(), Q[c].tolist()):
+                    acc += p * q
+                hit[c] = acc >= thr
+    return hit
+
+
 def _greedy_smaller_id_hits(barr, thr: float) -> list:
     """Ids whose vector is vetted by a SMALLER-id vector in ``barr``
-    (list of (id, vector)) at exact-fold dot ≥ ``thr`` — the greedy-by-id
-    drop rule shared by semantic_dedup's within-cell pass and
-    stream_ingest_semantic's within-batch pass.
-
-    Blocked numpy matmul (1024-row blocks bound the dot matrix at
-    ~160 MB for even a 20k-vector group) with the two-phase exactness
-    contract: dots clear of ``thr`` by ±1e-9 decide directly (float64
-    matmul error ≲1e-13 on unit vectors), pairs inside the band are
-    re-decided by the exact sequential fold ``_dot`` computes
-    (per-element double multiply, left-to-right double adds) — so the
-    returned ids are bit-identical to the Column-expression form. Id
-    comparison is python ``<``: identical to Spark's ordering for
-    integral and string ids (UTF-8 byte order == code-point order).
-    Assumes fixed-dim vectors (the kmeans/SemDeDup contract).
+    (list of (id, unit vector)) at dot ≥ ``thr`` — the greedy-by-id drop
+    rule shared by semantic_dedup's within-cell pass and
+    stream_ingest_semantic's within-batch pass: :func:`_vetted` with the
+    group on both sides. Assumes fixed-dim vectors.
 
     NULL ids violate the non-null-id contract and raise a descriptive
     error up front (ADVICE r08 #4): the replaced Column rule
     ``r.id < l.id`` silently never paired NULL ids, but here a None
-    would surface as an opaque ``sorted()`` TypeError / numpy dtype
-    mishap deep in the kernel — contract violations should fail loudly
-    at the boundary instead."""
+    would surface as an opaque numpy dtype mishap deep in the kernel —
+    contract violations should fail loudly at the boundary instead."""
     import numpy as np
-    n = len(barr)
     if any(b[0] is None for b in barr):
         raise ValueError(
             "_greedy_smaller_id_hits: NULL id in the group — the "
             "SemDeDup/stream-semantic contract requires non-null ids "
             "(the greedy drop rule orders by id value); filter NULL-id "
             "rows upstream")
-    order = sorted(range(n), key=lambda k: barr[k][0])
-    mat = np.asarray([barr[k][1] for k in order], dtype=np.float64)
-    ids = np.asarray([barr[k][0] for k in order])
-    eps = 1e-9
-    hit = np.zeros(n, dtype=bool)
-    B = 1024
-    for j0 in range(0, n, B):
-        j1 = min(j0 + B, n)
-        dots = mat[j0:j1] @ mat.T  # (block of smaller-id side) × all
-        # strict id-VALUE comparison, not sorted position: duplicate ids
-        # must never pair (the Column rule is r.id < l.id)
-        upper = ids[j0:j1, None] < ids[None, :]
-        hit |= ((dots >= thr + eps) & upper).any(axis=0)
-        for r, c in np.argwhere((dots >= thr - eps) & (dots < thr + eps)
-                                & upper):
-            if not hit[c]:
-                sv, bv = mat[j0 + r], mat[c]
-                acc = 0.0
-                for k in range(len(bv)):
-                    acc += float(sv[k]) * float(bv[k])
-                if acc >= thr:
-                    hit[c] = True
-    return [barr[order[i]][0] for i in range(n) if hit[i]]
+    ids = np.asarray([b[0] for b in barr])
+    mat = np.asarray([b[1] for b in barr], dtype=np.float64)
+    hit = _vetted(mat, mat, thr, ids, ids)
+    return [barr[i][0] for i in np.flatnonzero(hit)]
 
 
 def _drop_null_vecs(df: DataFrame, vec_col: str) -> DataFrame:
@@ -138,17 +158,17 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
                            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    Plan: broadcast the (small) query set → crossJoin streams the corpus once
-    with zero shuffle → window top-k per query (the only exchange, keyed by
-    query id). Self-matches excluded. Returns (query_id, neighbor_id, cosine).
+    Plan: broadcast the (small) query set → a nested-loop join on
+    ``neighbor_id != query_id`` (self-matches excluded) streams the corpus
+    once with zero shuffle → window top-k per query (the only exchange,
+    keyed by query id). Returns (query_id, neighbor_id, cosine).
     NULL vectors on either side are excluded (:func:`_drop_null_vecs`).
     """
     corpus = _drop_null_vecs(corpus, vec_col)
     queries = _drop_null_vecs(queries, vec_col)
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (c.crossJoin(F.broadcast(q))
-              .where(F.col("neighbor_id") != F.col("query_id"))
+    scored = (c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine")))
     return _top_k(scored, k)
@@ -353,21 +373,6 @@ def _nearest_centroid_l2(vec: Column, centroids: list[list[float]]) -> Column:
     return F.array_min(scored)["cell"]
 
 
-def _fresh_name(base: str, df: DataFrame, *more_taken: str) -> str:
-    """``base`` if it is free on ``df`` (and not among ``more_taken``),
-    else the first free ``base_<i>`` — internal working columns must
-    never collide with a user frame that already happens to carry the
-    name (duplicate/ambiguous column errors, or a silently wrong filter
-    reading the user's column; ADVICE r07 #4)."""
-    taken = set(df.columns) | set(more_taken)
-    if base not in taken:
-        return base
-    i = 0
-    while f"{base}_{i}" in taken:
-        i += 1
-    return f"{base}_{i}"
-
-
 def _nearest_cells(X, C):
     """Argmin-by-squared-L2 cell of each row of ``X`` (n × dim float64)
     against centroids ``C`` (k × dim float64, k ≥ 1): the one assign
@@ -465,27 +470,35 @@ def _assign_cells_bcast(src: DataFrame, cents: list[list[float]]) -> DataFrame:
 def _cell_sums(src: DataFrame, cents: list[list[float]]) -> DataFrame:
     """One Lloyd round, map-side: each partition assigns its rows of
     ``src`` (non-null ``v``) with :func:`_nearest_cells`, then sums vectors
-    and counts rows per cell in row order — at most k rows (cell, n, s)
-    per partition, no exchange (Scalding's map-side SummingCache)."""
+    and counts rows per cell in row order — at most k rows (cell, n, s,
+    skip) per partition, no exchange (Scalding's map-side SummingCache).
+    A NaN or NULL element (NULL arrives from Arrow as NaN) is left out of
+    its coordinate's sum and counted in ``skip``, so a centroid
+    coordinate is the mean of the cell's non-NULL, non-NaN values."""
     import numpy as np
     C = np.asarray(cents, dtype=np.float64)
 
     def sums(batches):
         import pandas as pd
         S, N = np.zeros_like(C), np.zeros(len(C), dtype=np.int64)
+        K = np.zeros(C.shape, dtype=np.int64)
         for pdf in batches:
             if len(pdf):
                 X = np.asarray(pdf["v"].tolist(), dtype=np.float64)
                 cells = _nearest_cells(X, C)
+                gap = np.isnan(X)
+                if gap.any():
+                    np.add.at(K, cells, gap)
+                    X[gap] = 0.0  # S never holds -0.0, so +0.0 is a no-op
                 np.add.at(S, cells, X)  # unbuffered: row order per cell
                 N += np.bincount(cells, minlength=len(C))
         nz = np.flatnonzero(N)
         if len(nz):  # an empty list column has no Arrow list type
             yield pd.DataFrame({"cell": nz.astype(np.int32), "n": N[nz],
-                                "s": list(S[nz])})
+                                "s": list(S[nz]), "skip": list(K[nz])})
 
     return src.select("v").mapInPandas(
-        sums, "cell int, n long, s array<double>")
+        sums, "cell int, n long, s array<double>, skip array<long>")
 
 
 def kmeans(corpus: DataFrame, k: int = 8, max_iter: int = 10,
@@ -558,15 +571,15 @@ def kmeans(corpus: DataFrame, k: int = 8, max_iter: int = 10,
     try:
         for _ in range(max_iter):
             iters += 1
-            S, N = np.zeros(np.shape(cents)), np.zeros(len(cents), dtype=int)
+            S, N = np.zeros(np.shape(cents)), np.zeros(np.shape(cents), int)
             rows = _cell_sums(src, cents).collect()  # partition order
             updates += len(rows)
             for r in rows:
                 S[r.cell] += r.s
-                N[r.cell] += r.n
-            # empty cells keep their position
-            new_cents = [(S[i] / N[i]).tolist() if N[i] else c
-                         for i, c in enumerate(cents)]
+                N[r.cell] += r.n - np.asarray(r.skip)
+            # a coordinate with no values (an empty cell) keeps its position
+            new_cents = np.divide(S, N, out=np.array(cents, dtype=np.float64),
+                                  where=N > 0).tolist()
             shift = max((abs(a - b)
                          for row_a, row_b in zip(cents, new_cents)
                          for a, b in zip(row_a, row_b)), default=0.0)
@@ -691,9 +704,9 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     # the sf1 cost center at pinned k: Σ n_c²·dim fused-lambda ops): ONE
     # exchange on cell ships (id, vecn) to applyInPandas, where the
     # Σ n_c²·dim work runs as blocked numpy matmuls at BLAS speed with
-    # the same kept-set BIT-FOR-BIT (_greedy_smaller_id_hits' ±1e-9
-    # boundary band re-decides via the exact _dot fold — the py_reference
-    # goldens pin this). vs the old plan this also HALVES the exchanged
+    # the same kept-set BIT-FOR-BIT (_vetted's ±1e-9 boundary band
+    # re-decides via the exact _dot fold — the py_reference goldens pin
+    # this). vs the old plan this also HALVES the exchanged
     # bytes (one vector table crosses, not two join sides) and drops the
     # eager localCheckpoint (e now has exactly one consumer, so the
     # 3x-assignment-recompute hazard it guarded is gone). Loser ids are
@@ -732,30 +745,38 @@ def semantic_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     leakage that shares no 8-gram still lands nearby in embedding space).
 
     Plan, 100 TB-first: eval suites are small (thousands to ~1e5 vectors),
-    so the benchmark side is pre-NORMALIZED and collected into ONE
-    broadcast row — the same broadcast-data shape as kmeans assignment.
-    The corpus then evaluates ``F.exists(bench_vecs, dot ≥ t)`` map-only
-    in the scan stage: no corpus shuffle, no explode, no join exchange at
-    all; the output is a filter over the original frame. (For benchmark
-    sides too big to broadcast, cluster them first and decontaminate per
-    centroid-bucket — the semantic_dedup(centroids=...) shape.)
+    so the benchmark side is collected, normalized (:func:`_unit_rows`)
+    and shipped as task-closure DATA — Scalding's map-side replicated
+    join (``crossWithTiny``), the same shape as kmeans assignment. The
+    corpus is then filtered by a scalar pandas UDF in ``where``: each
+    Arrow batch of the vector column — the only column that leaves the
+    JVM, so kept rows come back unaltered — is normalized and tested
+    against the benchmark by :func:`_vetted`. No corpus shuffle, no join
+    exchange at all; the output is a filter over the original frame.
+    (For benchmark sides too big to replicate, cluster them first and
+    decontaminate per centroid-bucket — the semantic_dedup(centroids=...)
+    shape.)
 
     Contracts shared with the rest of the similarity family: NULL corpus
     vectors are KEPT (no position in space → cannot be vetted → caller's
-    policy, same as semantic_dedup); zero vectors normalize to zeros, dot
-    0, kept for any threshold > 0; NULL/zero benchmark vectors are
-    dropped from the broadcast (they match nothing).
+    policy, same as semantic_dedup); a zero vector, or one with a NaN
+    or NULL element, has no direction and normalizes to zeros: dot 0,
+    kept for any threshold > 0; an Inf element makes every dot NaN, never
+    a hit. Benchmark vectors without a direction are dropped (they match
+    nothing).
 
-    ``stats['n_benchmark']`` reports the broadcast row count.
+    ``stats['n_benchmark']`` reports the benchmark vectors kept.
 
     ``max_benchmark``: CIRCUIT BREAKER (the fuzzy_join max_candidates
     contract). The benchmark's vectors are collected to the driver and
-    broadcast; a caller passing a million-row "benchmark" should get a
-    descriptive error, not a driver OOM. The count costs one action over
-    the (small) benchmark frame before the collect; raise the cap
-    deliberately if your driver/executors have the memory, or cluster
+    replicated to every task; a caller passing a million-row "benchmark"
+    should get a descriptive error, not a driver OOM. The count costs one
+    action over the (small) benchmark frame before the collect; raise the
+    cap deliberately if your driver/executors have the memory, or cluster
     the benchmark and decontaminate per centroid-bucket instead.
     """
+    import numpy as np
+    import pandas as pd
     bcol = bench_vec_col or vec_col
     bench_nonnull = _drop_null_vecs(benchmark, bcol)
     n_bench = bench_nonnull.count()
@@ -768,32 +789,25 @@ def semantic_decontaminate(corpus: DataFrame, benchmark: DataFrame,
             f"benchmark (semantic_dedup(centroids=...)) and decontaminate "
             f"per centroid-bucket")
     rows = bench_nonnull.select(F.col(bcol).alias("v")).collect()
-    bnorm = []
-    for r in rows:
-        v = [float(x) for x in r.v]
-        acc = 0.0
-        for x in v:
-            acc += x * x
-        nrm = math.sqrt(acc)
-        if nrm > 0:
-            bnorm.append([x / nrm for x in v])
+    P = np.zeros((0, 0))
+    if rows:
+        U, ok = _unit_rows(np.asarray([r.v for r in rows], dtype=np.float64))
+        P = U[ok]
     if stats is not None:
-        stats["n_benchmark"] = len(bnorm)
-    if not bnorm:
+        stats["n_benchmark"] = len(P)
+    if not len(P):
         return corpus
-    spark = corpus.sparkSession
-    bv = _fresh_name("__bvecs", corpus)
-    vn = _fresh_name("__vecn", corpus, bv)
-    bdf = _arrow_frame(spark, [[bnorm]], f"{bv}: array<array<double>>")
-    # materialize the normalized vector as a COLUMN before the exists:
-    # Catalyst does not common-subexpression across lambda boundaries, so
-    # an inline normalization re-runs the norm + divide + array alloc once per
-    # BENCHMARK element per row — measured 187 s → ~2 s at sf1
-    # (20k×64 corpus, 541-vector benchmark). Bit-identical results.
-    hit = F.exists(F.col(bv),
-                   lambda b: _dot(F.col(vn), b)
-                   >= F.lit(float(threshold)))
-    return (corpus.withColumn(vn, _normalized(vec_col))
-            .crossJoin(F.broadcast(bdf))
-            .where(~F.coalesce(hit, F.lit(False)))
-            .drop(bv, vn))
+    thr = float(threshold)
+
+    # no type hints: this module's postponed annotations are strings
+    # Spark cannot resolve, and an unhinted pandas_udf is scalar
+    @F.pandas_udf("boolean")
+    def vetted(v):
+        has = v.notna().to_numpy()
+        hit = np.zeros(len(v), dtype=bool)
+        if has.any():
+            Q, _ = _unit_rows(np.asarray(v[has].tolist(), dtype=np.float64))
+            hit[has] = _vetted(P, Q, thr)
+        return pd.Series(hit)
+
+    return corpus.where(~vetted(F.col(vec_col)))

@@ -211,7 +211,7 @@ def _arrow_frame(spark: SparkSession, columns, schema):
     StructType or DDL string).
 
     The one path for frames the engine builds from driver-side values
-    (CC labels, bloom words, broadcast centroids, dropped-id lists). A
+    (CC labels, bloom words, the semantic tier's dropped-id lists). A
     ``pa.Table`` plans a JVM ``LocalRelation``: scanning or broadcasting it
     starts no Python worker. A list through ``createDataFrame`` plans a
     ``LogicalRDD`` over a Python RDD instead, scanned by one Python-worker

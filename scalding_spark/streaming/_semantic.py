@@ -3,8 +3,6 @@ the _neardup.py convention."""
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -29,25 +27,22 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
 
     Per batch (foreachBatch):
 
-    1. the batch's non-NULL, nonzero-norm vectors are normalized and
-       collected into ONE broadcast row (micro-batches are small by
-       construction; ``max_batch`` is the circuit breaker — same
-       driver-OOM contract as semantic_decontaminate's max_benchmark);
+    1. the batch's non-NULL vectors are collected to the driver and
+       normalized (:func:`similarity._unit_rows`; vectors without a
+       direction drop out). Micro-batches are small by construction;
+       ``max_batch`` is the circuit breaker — same driver-OOM contract
+       as semantic_decontaminate's max_benchmark;
     2. within-batch semantic dedup: a row is dropped when ANY smaller-id
        batch vector has cosine ≥ ``threshold`` — EXACT greedy-by-id
        (≡ ``similarity.semantic_dedup(k=1)``, no cell-boundary recall
-       loss at micro-batch sizes), computed driver-side as one blocked
-       numpy matmul over the collected vectors (r08 — replaced the
-       broadcast-row ``F.exists`` HOF, whose per-element lambda cost
-       made this tier throughput-flat; bit-identical results via the
-       ±1e-9 boundary-band exact-fold contract, see
-       :func:`similarity._greedy_smaller_id_hits`);
+       loss at micro-batch sizes), decided driver-side by the family's
+       one threshold kernel, :func:`similarity._vetted`, over the
+       collected vectors (:func:`similarity._greedy_smaller_id_hits`);
     3. vs the store: ONE Arrow-batched map-only pass over the store
-       (``mapInPandas``: numpy matmul per store block — the dense
-       all-pairs dot is the shape where Arrow+BLAS beats codegen'd HOFs
-       10-100×, SCALING.md r08) computes which batch vectors some stored
-       vector vets; the store is never shuffled and never collected —
-       only matched batch IDS cross the exchange, ≡
+       (``mapInPandas``: :func:`similarity._vetted` per store block, the
+       batch as task-closure data) computes which batch vectors some
+       stored vector vets; the store is never shuffled and never
+       collected — only matched batch IDS cross the exchange, ≡
        ``similarity.semantic_decontaminate(batch, stored)`` semantics;
     4. novel docs land in ``corpus_path``, their normalized vectors in
        ``store_path``; crash/replay semantics: see
@@ -55,8 +50,9 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
 
     Contracts shared with the similarity family: NULL-vector docs are
     KEPT and never stored (no position in space → cannot be vetted, and
-    can never vet others); zero vectors are kept for any threshold > 0
-    and not stored (they match nothing).
+    can never vet others); a zero vector, or one with a NaN or NULL
+    element, has no direction: kept for any threshold, never vetting
+    others (zero vectors are also not stored).
 
     ``compact_every_n_epochs=N``: end-of-epoch store+corpus compaction
     every N epochs (see stream_ingest_dedup — same hook, same replay
@@ -102,9 +98,10 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
     layout check — mixed-precision parquet fragments would corrupt the
     scan schema).
     """
+    import numpy as np
     from scalding_spark.functions.similarity import (
-        _drop_null_vecs, _greedy_smaller_id_hits, _normalized, lsh_bucket,
-        random_hyperplanes)
+        _drop_null_vecs, _greedy_smaller_id_hits, _normalized, _unit_rows,
+        lsh_bucket, random_hyperplanes)
     from scalding_spark.session import _arrow_frame
     from scalding_spark.streaming import _epoch_ingest
     thr = float(threshold)
@@ -147,25 +144,19 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
         rows = valid.select(F.col(id_col).alias("i"),
                             F.col(vec_col).alias("v")).collect()
         barr = []
-        for r in rows:
-            v = [float(x) for x in r.v]
-            nrm = math.sqrt(sum(x * x for x in v))
-            if nrm > 0:
-                barr.append((r.i, [x / nrm for x in v]))
+        if rows:
+            U, ok = _unit_rows(np.asarray([r.v for r in rows],
+                                          dtype=np.float64))
+            barr = [(r.i, u) for r, u, k in zip(rows, U, ok) if k]
         if barr and store_buckets is not None:
             _planes_for(len(barr[0][1]))  # size planes before any use
         if barr:
             # within-batch: greedy-by-id (drop i when ANY smaller-id batch
             # vector clears the threshold — ≡ semantic_dedup(k=1)),
-            # computed DRIVER-SIDE: the normalized batch is already in
-            # hand (it was collected for the store probe), so the n²·dim
-            # all-pairs dot is one numpy matmul instead of the r07
-            # crossJoin(broadcast row) + per-element HOF — same ±1e-9
-            # boundary-band exact-fold contract as the store probe, and
-            # the python normalization above IS Spark's _normalized
-            # op-for-op (per-element double square, sequential left-fold
-            # add, IEEE sqrt/divide), so kept ids are bit-identical to
-            # the Column-expression form the parity tests compare against.
+            # computed DRIVER-SIDE on the batch already in hand for the
+            # store probe; _unit_rows is Spark's _normalized bit for bit,
+            # so kept ids equal the batch operators' the parity tests
+            # compare against.
             dropped = _greedy_smaller_id_hits(barr, thr)
             if dropped:
                 from pyspark.sql.types import StructField, StructType
@@ -237,59 +228,32 @@ def stream_ingest_semantic(stream_df: DataFrame, corpus_path: str,
 def _vectorized_store_probe(store, barr, thr: float, id_col: str,
                             id_type):
     """Matched-batch-ids store probe as ONE Arrow-batched map-only pass:
-    per store block, a numpy matmul (store_block × batchᵀ) marks every
-    batch vector some stored vector vets at cosine ≥ ``thr``.
-
-    This replaces the r07 HOF form (crossJoin(broadcast(batch row)) +
-    F.exists of a zip_with/aggregate dot) which measured ~40M
-    multiply-adds/s at sf1 — per-element lambda allocation made the
-    semantic tier the only throughput-FLAT ingest tier (SCALING.md r08:
-    22.3 s/micro-batch, |store|×|batch|×dim-bound). The dense all-pairs
-    dot is exactly the shape where Arrow+BLAS beats codegen'd HOFs by
-    10-100×; the plan keeps every scale property the HOF form had — the
-    store is scanned map-only (partition pruning still reaches the scan
-    below the mapInPandas), never shuffled, never collected; only
-    matched batch IDS cross the exchange.
-
-    EXACTNESS is preserved bit-for-bit vs the HOF form (the batch≡stream
-    parity tests compare kept-id sets against the Column-expression
-    batch operators): matmul results clear of ``thr`` by ±1e-9 decide
-    directly — float64 dot error for unit vectors at any practical dim
-    is ≤ ~1e-13 — and the rare pairs inside the ±1e-9 boundary band are
-    re-decided by the exact sequential fold Spark's aggregate() computes
-    (same per-element multiply, same left-to-right double adds).
+    each store block is ``P`` and the batch (``barr``, (id, unit vector)
+    pairs, in the task closure) is ``Q`` of :func:`similarity._vetted`,
+    which marks every batch vector some stored vector vets at cosine ≥
+    ``thr`` — bit-identical to the Column-expression batch operators the
+    batch≡stream parity tests compare against. The store is scanned
+    map-only (partition pruning still reaches the scan below the
+    mapInPandas), never shuffled, never collected; only matched batch
+    IDS cross the exchange.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import StructField, StructType
+    from scalding_spark.functions.similarity import _vetted
 
     bids = [i for i, _ in barr]
     bmat = np.asarray([v for _, v in barr], dtype=np.float64)
-    eps = 1e-9
-    schema = StructType([StructField(id_col, id_type)])
 
     def probe(batches):
         hit = np.zeros(len(bids), dtype=bool)
         for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = pdf["vecn"].tolist()
-            smat = np.asarray(vecs, dtype=np.float64)
-            dots = smat @ bmat.T
-            hit |= (dots >= thr + eps).any(axis=0)
-            for r, c in np.argwhere((dots >= thr - eps)
-                                    & (dots < thr + eps)):
-                if not hit[c]:
-                    acc = 0.0
-                    sv, bv = vecs[r], bmat[c]
-                    for k in range(len(bv)):
-                        acc += float(sv[k]) * float(bv[k])
-                    if acc >= thr:
-                        hit[c] = True
-        matched = [bids[j] for j in np.flatnonzero(hit)]
-        yield pd.DataFrame({id_col: matched})
+            hit |= _vetted(np.asarray(pdf["vecn"].tolist(), dtype=np.float64),
+                           bmat, thr)
+        yield pd.DataFrame({id_col: [bids[j] for j in np.flatnonzero(hit)]})
 
-    return store.select("vecn").mapInPandas(probe, schema).distinct()
+    return store.select("vecn").mapInPandas(
+        probe, StructType([StructField(id_col, id_type)])).distinct()
 
 
 def _probe_buckets(vecs, planes: list[list[float]],

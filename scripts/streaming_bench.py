@@ -21,7 +21,10 @@ Protocol per tier:
 Prints one JSON line per (tier, layout) with store size, probe size,
 batch count, seconds, docs/s and ``calibration_sec`` (perfbench's
 host-speed probe, read just before the timed run) — paste into
-SCALING.md's streaming table. Usage:
+SCALING.md's streaming table. The probe's Spark half depends on the
+session it runs in, so ``calibration_sec`` compares only with other
+readings from this script, never with bench.py's or perfbench's.
+Usage:
 
     python scripts/streaming_bench.py [sf_dir] [tier ...]
     # defaults: /root/testdata/sf0.1, all tiers

@@ -86,24 +86,61 @@ def test_rounds_shuffle_nothing_when_task_sizing_repartitions_up(spark):
     """A one-partition corpus with more than 100k row×centroid products
     is repartitioned up by the task sizing — once per call, into a cache
     the rounds read: extra rounds add no shuffle bytes, and no cache
-    outlives the call."""
-    import sys
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts"))
-    from scaling import _shuffle_totals
-    if spark.sparkContext.defaultParallelism < 2:
+    outlives the call.
+
+    Bytes are summed over the stages of the call's own jobs (a job
+    group): a session-wide before/after total also moves when the status
+    store evicts old stages, which it does past spark.ui.retainedStages
+    (1000) — routinely, late in a long test session."""
+    sc = spark.sparkContext
+    if sc.defaultParallelism < 2:
         pytest.skip("task sizing cannot repartition up on one core")
     df = spark.createDataFrame(
         [(i, [float(i % 97), float(i % 89)]) for i in range(13_000)],
         "vec_id long, embedding array<double>").coalesce(1)
 
     def shuffled(max_iter):
-        w0, _ = _shuffle_totals(spark)
-        stats: dict = {}
-        similarity.kmeans(df, k=8, max_iter=max_iter, stats=stats)
-        return _shuffle_totals(spark)[0] - w0, stats["iterations"]
+        group = f"kmeans-shuffle-{max_iter}"
+        sc.setJobGroup(group, "round shuffle pin")
+        try:
+            stats: dict = {}
+            similarity.kmeans(df, k=8, max_iter=max_iter, stats=stats)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        ids = {s for j in sc.statusTracker().getJobIdsForGroup(group)
+               for s in sc.statusTracker().getJobInfo(j).stageIds}
+        gw = sc._gateway
+        stages = sc._jsc.sc().statusStore().stageList(
+            gw.jvm.java.util.ArrayList(), False, False,
+            gw.new_array(gw.jvm.double, 0), gw.jvm.java.util.ArrayList())
+        w = sum(stages.apply(i).shuffleWriteBytes()
+                for i in range(stages.size())
+                if stages.apply(i).stageId() in ids)
+        return w, stats["iterations"]
 
     (w1, _), (w3, rounds) = shuffled(1), shuffled(3)
     assert rounds == 3 and w1 > 0
     assert w3 == w1, f"rounds 2-3 shuffled {w3 - w1} bytes"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("gap", [float("nan"), None])
+def test_kmeans_means_skip_nan_and_null_elements(spark, gap):
+    """A NaN or NULL vector element is left out of its coordinate's mean:
+    the round pass used to emit a NaN cell sum, which Arrow turned into
+    NULL, and the driver's add then failed. Assignments, centroids and
+    semantic_dedup's kept set on this corpus are pinned."""
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [gap, 1.0]), (3, [0.0, 1.0])], schema)
+    assigned, cents = similarity.kmeans(df, k=2, max_iter=3)
+    assert sorted(tuple(r) for r in assigned.collect()) == \
+        [(1, 1), (2, 0), (3, 0)]
+    assert cents == [[0.0, 1.0], [1.0, 0.0]]
+    assert sorted(r.vec_id for r in similarity.semantic_dedup(
+        df, threshold=0.9, k=2).collect()) == [1, 2, 3]
+    # one cell: coordinate 0 averages two values, coordinate 1 three
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [gap, 4.0]), (3, [3.0, 6.0])], schema)
+    _, cents = similarity.kmeans(df, k=1, max_iter=1)
+    assert cents == [[2.0, 4.0]]

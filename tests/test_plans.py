@@ -334,10 +334,10 @@ def test_kmeans_bcast_assignment_matches_literal(spark):
 
 
 def test_kmeans_centroid_build_side_is_one_partition(spark):
-    """A driver-built one-row frame (semantic_decontaminate's broadcast
-    benchmark vectors) must be a single task: plain createDataFrame spreads
-    even one row over defaultParallelism Python-worker slices. The Arrow
-    path plans a JVM LocalRelation, one partition per row at most."""
+    """A driver-built one-row frame must be a single task: plain
+    createDataFrame spreads even one row over defaultParallelism
+    Python-worker slices. The Arrow path plans a JVM LocalRelation, one
+    partition per row at most."""
     from scalding_spark.session import _arrow_frame
     one = _arrow_frame(spark, [[[[0.0, 1.0]]]], "cents: array<array<double>>")
     assert _optimized(one).startswith("LocalRelation"), _optimized(one)

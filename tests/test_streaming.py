@@ -689,6 +689,80 @@ def test_greedy_kernel_duplicate_ids_never_pair():
     assert _greedy_smaller_id_hits(barr, 0.9) == [2]
 
 
+
+
+def test_unit_rows_matches_spark_normalized(spark):
+    """similarity._unit_rows normalizes outside the JVM (the semantic
+    tier's collected batch, semantic_decontaminate's benchmark and
+    corpus batches) and must equal Spark's _normalized bit for bit on
+    every row with a direction, across magnitudes."""
+    import random
+    import numpy as np
+    from scalding_spark.functions import similarity
+    rng = random.Random(3)
+    rows = [(i, [rng.gauss(0, 10.0 ** rng.randint(-3, 3)) for _ in range(7)])
+            for i in range(300)] + [(300, [0.0] * 7)]
+    want = {r.vec_id: r.u for r in spark.createDataFrame(rows, EMB_SCHEMA)
+            .select("vec_id", similarity._normalized("embedding").alias("u"))
+            .collect()}
+    U, ok = similarity._unit_rows(np.asarray([v for _, v in rows]))
+    assert ok.tolist() == [True] * 300 + [False]
+    assert all(U[i].tolist() == want[i] for i, _ in rows)
+
+
+# --- non-finite vectors across the semantic family ----------------------------
+
+NAN, INF = float("nan"), float("inf")
+
+
+def test_semantic_family_keeps_non_finite_rows(spark, tmp_path):
+    """A vector with a NaN, Inf or NULL element has no usable direction:
+    each caller of the threshold kernel keeps its row, and such a row
+    never vets another one — even an identical one.
+    semantic_decontaminate used to drop it, because Spark orders NaN
+    above every double and its exists(dot ≥ t) read a NaN dot as a hit."""
+    import math
+    import numpy as np
+    from scalding_spark.functions import similarity
+    from scalding_spark.streaming._semantic import _vectorized_store_probe
+    rows = [(1, [NAN, 1.0]), (2, [INF, 1.0]), (3, [1.0, 0.0]),
+            (4, [0.0, 1.0]), (5, [NAN, 1.0]), (6, [INF, 1.0]),
+            (7, [2.0, 0.0])]
+    df = spark.createDataFrame(rows, EMB_SCHEMA)
+    bench = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (101, [NAN, 1.0]), (102, [INF, 1.0])],
+        EMB_SCHEMA)
+    kept = {r.vec_id: r.embedding for r in
+            similarity.semantic_decontaminate(df, bench, 0.9).collect()}
+    assert sorted(kept) == [1, 2, 4, 5, 6]
+    # the kept NaN row comes back as it went in (not NULL-rewritten)
+    assert math.isnan(kept[1][0]) and kept[1][1] == 1.0
+    assert sorted(r.vec_id for r in similarity.semantic_dedup(
+        df, threshold=0.9, k=1).collect()) == [1, 2, 3, 4, 5, 6]
+    U, _ = similarity._unit_rows(np.asarray([v for _, v in rows]))
+    barr = [(i, u) for (i, _), u in zip(rows, U)]
+    assert similarity._greedy_smaller_id_hits(barr, 0.9) == [7]
+    # store: Spark's _normalized writes [NaN, NaN] for a NaN norm
+    store = spark.createDataFrame(
+        [([NAN, NAN],), ([NAN, 0.0],), ([1.0, 0.0],)], "vecn array<double>")
+    got = _vectorized_store_probe(
+        store, [b for b in barr if b[0] in (2, 3, 4)], 0.9, "vec_id",
+        df.schema["vec_id"].dataType).collect()
+    assert [r.vec_id for r in got] == [3]
+    # the ingest tier: NaN/Inf/NULL-element docs kept, unchanged, and
+    # never vetting a later batch
+    paths = tuple(str(tmp_path / p) for p in ("nf", "nfc", "nfs", "nfk"))
+    _run_semantic(spark, [(1, [NAN, 1.0]), (2, [INF, 1.0]), (3, [1.0, 0.0]),
+                          (4, [None, 1.0]), (5, [NAN, 1.0])], paths)
+    _run_semantic(spark, [(10, [1.0, 0.0]), (11, [NAN, 1.0]),
+                          (12, [0.0, 1.0])], paths)
+    corpus = {r.vec_id: r.embedding
+              for r in spark.read.parquet(paths[1]).collect()}
+    assert sorted(corpus) == [1, 2, 3, 4, 5, 11, 12]
+    assert math.isnan(corpus[1][0]) and corpus[1][1] == 1.0
+    assert corpus[4] == [None, 1.0]
+
+
 # --- store_dtype='float32' (VERDICT r09 #6) -----------------------------------
 
 def test_stream_ingest_semantic_float32_store_parity(spark, tmp_path):

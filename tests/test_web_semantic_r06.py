@@ -118,8 +118,9 @@ def test_semantic_decontaminate_empty_or_degenerate_benchmark(spark):
 
 
 def test_semantic_decontaminate_plan_is_map_only(spark):
-    """The corpus side must not shuffle: one BroadcastNestedLoopJoin of
-    the one-row benchmark frame, zero Exchange operators."""
+    """The corpus side must not shuffle: the benchmark rides the task
+    closure and the corpus is filtered by one Arrow-evaluated pandas UDF
+    over the vector column — no join, zero Exchange operators."""
     from scalding_spark.functions.similarity import semantic_decontaminate
     corpus = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(50)],
@@ -128,8 +129,9 @@ def test_semantic_decontaminate_plan_is_map_only(spark):
                                   "vec_id long, embedding array<double>")
     out = semantic_decontaminate(corpus, bench, threshold=0.99)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # the ONLY exchange is the BroadcastExchange of the one-row benchmark;
     # the corpus must never hash/range-shuffle
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "ArrowEvalPython [vetted(embedding" in plan, plan
+    assert "Filter NOT pythonUDF" in plan, plan
+    assert "Join" not in plan, plan
